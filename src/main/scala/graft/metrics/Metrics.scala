@@ -1,7 +1,9 @@
 package graft.metrics
 
 import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CollectMetrics}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 
 import graft.rules.RuleConfig
 
@@ -65,6 +67,16 @@ object Metrics {
     * `sources` are observation prefixes ("dd2", "dd3", "cd2", "ann2",
     * "ann3") — each must correspond to a `<src>_buckets` observe node
     * in df's plan (fails fast otherwise).
+    *
+    * An optimizer may prune an observe node out of the executed plan:
+    * AQE's empty-relation propagation replaces a subtree that produced
+    * no rows (e.g. an LSH stage with no candidate pairs) by an
+    * EmptyRelation, CollectMetricsExec included, and a join with an
+    * empty side drops its other side the same way. The observation is
+    * defined as its aggregates over its child, so a node that is in
+    * df's analyzed plan but missing from the executed one is evaluated
+    * as exactly that aggregate — a second pass over the observed
+    * subtree on this rare path, and a real value, never a default.
     */
   def truncationMetrics(df: DataFrame, sources: Seq[String]): DataFrame = {
     val spark = df.sparkSession
@@ -74,10 +86,14 @@ object Metrics {
     // accumulators this queryExecution never sees
     df.queryExecution.toRdd.foreach(_ => ())
     val om = df.queryExecution.observedMetrics
+    val seams = df.queryExecution.analyzed.collect { case c: CollectMetrics => c.name -> c }.toMap
     val rows = sources.map { src =>
-      val row = om.getOrElse(s"${src}_buckets",
+      val name = s"${src}_buckets"
+      val seam = seams.getOrElse(name,
         throw new IllegalArgumentException(
-          s"no '${src}_buckets' observation in plan (have: ${om.keys.mkString(",")})"))
+          s"no '$name' observation in plan (have: ${seams.keys.mkString(",")})"))
+      val row = om.getOrElse(name,
+        ColumnShim.ofRows(spark, Aggregate(Nil, seam.metrics, seam.child)).head())
       def metric(field: String): Long = {
         val names = row.schema.fieldNames
         val i = names.indexWhere(n => n == field || n == s"${src}_$field")

@@ -18,6 +18,13 @@ import graft.schema.Turn
   * window stays within one bucket — per-bucket results are identical to
   * a whole-corpus run (asserted by CheckpointSpec).
   *
+  * Per-bucket tasks and files: a bucket's labeling job runs one conv_id
+  * exchange with no fixed partition count, so AQE sizes its reduce side
+  * to the bucket — a handful of reduce tasks and parquet files per
+  * bucket, not `spark.sql.shuffle.partitions` of each (200 by default:
+  * 51,200 files at `--buckets 256`). The commit's footer scan and the
+  * metrics read-back below touch only those files.
+  *
   * At real scale the input table would itself be bucket-partitioned
   * (Iceberg `bucket(conv_id, B)` partition transform), making each
   * bucket job scan only its own files; on flat sandbox parquet each

@@ -22,8 +22,13 @@ import graft.scrub.Scrub
   *     repetition ratio) — computed once per row while the String is
   *     already materialized, with no Turn/ScoredTurn serialization.
   *  2. ONE repartition by conv_id; all conversation windows ride that
-  *     partitioning (no further exchanges). The language vote shares
-  *     the sequence windows' (conv, turn) sort AND Window operator
+  *     partitioning (no further exchanges). The exchange carries no
+  *     partition count (REPARTITION_BY_COL), so AQE sizes its reduce
+  *     side — tasks and output files — to the data: a checkpointed
+  *     bucket gets a handful, not `spark.sql.shuffle.partitions` (the
+  *     count used when AQE is off). Every window is conversation-
+  *     scoped, so labels never depend on the count. The language vote
+  *     shares the sequence windows' (conv, turn) sort AND Window operator
   *     (unbounded frame over the same spec): 2 intra-partition sorts
   *     and 2 Window operators total, over SLIM rows (no normalized
   *     text — see ScoredTurn).
@@ -101,8 +106,7 @@ object QualityFilter {
     val spark = scored.sparkSession
     import spark.implicits._
 
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val byConv = scored.repartition(parts, $"conv_id")
+    val byConv = scored.repartition($"conv_id")
 
     val wSeq = Window.partitionBy($"conv_id").orderBy($"turn_idx")
     val wDup = Window.partitionBy($"conv_id", $"norm_hash").orderBy($"turn_idx")

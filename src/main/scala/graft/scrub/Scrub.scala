@@ -108,16 +108,6 @@ object Scrub {
     (cur, mapCol)
   }
 
-  // Compiled once per JVM; shared by oracle + tests. Arrays for the
-  // hot path (index-aligned with RuleConfig.ScrubChain).
-  private val chainRules: Array[String] = RuleConfig.ScrubChain.map(_._1).toArray
-  private val chainPats: Array[Pattern] =
-    RuleConfig.ScrubChain.map { case (_, p, _) => Pattern.compile(p) }.toArray
-  private val chainRepls: Array[String] = RuleConfig.ScrubChain.map(_._3).toArray
-  private val GateEmail = chainRules.indexOf(RuleConfig.ScrubEmail)
-  private val GateKey = chainRules.indexOf(RuleConfig.ScrubKey)
-  private val GatePhone = chainRules.indexOf(RuleConfig.ScrubPhone)
-  private val GateSlur = chainRules.indexOf(RuleConfig.ScrubSlur)
   private val slurToks: Array[String] =
     RuleConfig.SlurTokens.map(_.toLowerCase(java.util.Locale.ROOT)).toArray
   // the gate's ASCII-case-insensitive scan (and `(?i)` itself, which
@@ -165,10 +155,10 @@ object Scrub {
     *             only precedes the span and is not needed by the gate);
     *  - slur   — contains a slur token ASCII-case-insensitively (the
     *             \b boundaries only restrict further).
-    * A cleared gate bit proves count 0 / no replacement without running
-    * the regex (~85% of rows clear email/key/slur). The mask stays
-    * valid for every later link of the chain even after an earlier rule
-    * replaced text: replacement tokens (<EMAIL> etc.) contain no '@',
+    * Returns one `Feat*` bit per condition found. A cleared bit proves
+    * count 0 / no replacement without running the regex (~85% of rows
+    * clear email/key/slur). The mask stays valid for every later link
+    * of the chain even after an earlier rule replaced text: replacement tokens (<EMAIL> etc.) contain no '@',
     * digit, or slur substring, and their '<'/'>' break any hex run or
     * key prefix that could otherwise form across a splice — all
     * characters of a later match therefore already existed in `s`
@@ -233,55 +223,89 @@ object Scrub {
       i += 1
     }
     var mask = 0
-    if (hasAt) mask |= 1 << GateEmail
-    if (keyHit) mask |= 1 << GateKey
-    if (phoneHit) mask |= 1 << GatePhone
-    if (slurHit) mask |= 1 << GateSlur
+    if (hasAt) mask |= FeatEmail
+    if (keyHit) mask |= FeatKey
+    if (phoneHit) mask |= FeatPhone
+    if (slurHit) mask |= FeatSlur
     mask
   }
 
-  /** Sequential chain, counts index-aligned with RuleConfig.ScrubChain
-    * — the pipeline hot path (ScrubAllExpr): no Map/tuple/StringBuilder
-    * allocation unless a rule actually fires.
+  private val FeatEmail = 1
+  private val FeatKey = 2
+  private val FeatPhone = 4
+  private val FeatSlur = 8
+  /** The rules [[gateMask]] has a necessary condition for. */
+  private val gateFeature: Map[String, Int] = Map(
+    RuleConfig.ScrubEmail -> FeatEmail, RuleConfig.ScrubKey -> FeatKey,
+    RuleConfig.ScrubPhone -> FeatPhone, RuleConfig.ScrubSlur -> FeatSlur)
+
+  /** An ordered scrub chain of (rule, pattern, replacement) links,
+    * compiled once. Gating fails closed: a rule [[gateMask]] has no
+    * condition for runs on every row, and once such a rule replaces
+    * text every later rule runs ungated too — its replacement may
+    * create matches the gate scan never saw (the soundness argument
+    * above covers the four known replacements only).
     */
-  def scrubPlainArray(normText: String): (String, Array[Int]) = {
-    val k = chainPats.length
-    val counts = new Array[Int](k)
-    if (normText == null) return (null, counts)
-    val gates = gateMask(normText)
-    var cur = normText
-    var r = 0
-    while (r < k) {
-      if ((gates & (1 << r)) != 0) {
-        val m = chainPats(r).matcher(cur)
-        if (m.find()) {
-          val repl = chainRepls(r)
-          val sb = new java.lang.StringBuilder(cur.length)
-          var last = 0
-          var n = 0
-          do {
-            n += 1
-            sb.append(cur, last, m.start()).append(repl)
-            last = m.end()
-          } while (m.find())
-          sb.append(cur, last, cur.length)
-          cur = sb.toString
-          counts(r) = n
+  final class Chain(links: Seq[(String, String, String)]) {
+    private val rules: Array[String] = links.map(_._1).toArray
+    private val pats: Array[Pattern] = links.map(l => Pattern.compile(l._2)).toArray
+    private val repls: Array[String] = links.map(_._3).toArray
+    // 0 = no gate condition: always run
+    private val feats: Array[Int] = rules.map(gateFeature.getOrElse(_, 0))
+
+    /** Sequential chain, counts index-aligned with `links` — the
+      * pipeline hot path (ScrubAllExpr): no Map/tuple/StringBuilder
+      * allocation unless a rule actually fires.
+      */
+    def scrubPlainArray(normText: String): (String, Array[Int]) = {
+      val k = pats.length
+      val counts = new Array[Int](k)
+      if (normText == null) return (null, counts)
+      var gates = gateMask(normText)
+      var cur = normText
+      var r = 0
+      while (r < k) {
+        if (feats(r) == 0 || (gates & feats(r)) != 0) {
+          val m = pats(r).matcher(cur)
+          if (m.find()) {
+            val repl = repls(r)
+            val sb = new java.lang.StringBuilder(cur.length)
+            var last = 0
+            var n = 0
+            do {
+              n += 1
+              sb.append(cur, last, m.start()).append(repl)
+              last = m.end()
+            } while (m.find())
+            sb.append(cur, last, cur.length)
+            cur = sb.toString
+            counts(r) = n
+            if (feats(r) == 0) gates = -1
+          }
         }
+        r += 1
       }
-      r += 1
+      (cur, counts)
     }
-    (cur, counts)
+
+    /** Map-shaped view of [[scrubPlainArray]] (golden oracle). */
+    def scrubPlain(normText: String): (String, Map[String, Int]) = {
+      val (cur, counts) = scrubPlainArray(normText)
+      (cur, rules.indices.map(i => rules(i) -> counts(i)).toMap)
+    }
   }
+
+  // Compiled once per JVM; shared by oracle + pipeline + tests.
+  private val chain = new Chain(RuleConfig.ScrubChain)
+
+  /** [[Chain.scrubPlainArray]] over [[RuleConfig.ScrubChain]]: counts
+    * index-aligned with it. */
+  def scrubPlainArray(normText: String): (String, Array[Int]) =
+    chain.scrubPlainArray(normText)
 
   /** Sequential chain (golden oracle) — Map-shaped view of
     * [[scrubPlainArray]].
     */
-  def scrubPlain(normText: String): (String, Map[String, Int]) = {
-    val (cur, counts) = scrubPlainArray(normText)
-    var m = Map.empty[String, Int]
-    var i = 0
-    while (i < chainRules.length) { m = m.updated(chainRules(i), counts(i)); i += 1 }
-    (cur, m)
-  }
+  def scrubPlain(normText: String): (String, Map[String, Int]) =
+    chain.scrubPlain(normText)
 }

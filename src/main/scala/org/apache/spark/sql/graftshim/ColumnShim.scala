@@ -20,7 +20,12 @@ object ColumnShim {
     * Benchmarking helper.
     */
   def reExecute(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    ofRows(df.sparkSession, df.queryExecution.logical)
+
+  /** DataFrame over a logical plan (`Dataset.ofRows` is `private[sql]`). */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
-      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      df.queryExecution.logical)
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

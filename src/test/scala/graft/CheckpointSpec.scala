@@ -472,4 +472,58 @@ class CheckpointSpec extends AnyFunSuite {
     val v2 = t2.commitBuckets(Set(1))
     assert(v2 == 4 && t2.completedBuckets == Set(0, 1))
   }
+
+  private def labeled(df: org.apache.spark.sql.DataFrame): Seq[LabeledTurn] = {
+    import TestSpark.spark.implicits._
+    df.as[LabeledTurn].collect().sortBy(t => (t.conv_id, t.turn_idx))
+      .map(t => t.copy(drop_reasons = t.drop_reasons.toList)).toSeq
+  }
+
+  test("conv near-dup with no LSH candidates: truncation reported, run completes (AQE on)") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // a small corpus without near-dups: the LSH finds no candidate
+    // pairs, and AQE's empty-relation propagation prunes the cd2_buckets
+    // observe node out of the executed plan
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val ds = spark.createDataset(TranscriptGen.generateLocal(40, seed = 3, skewCap = 200))
+    val cfg = QualityFilter.ConvNearDupConfig()
+    val probe = QualityFilter.convNearDupDropIds(ds.toDF(), cfg)
+    assert(probe.queryExecution.toRdd.count() == 0)
+    assert(!probe.queryExecution.observedMetrics.contains("cd2_buckets"))
+    val root = Files.createTempDirectory("graft_cnd0").toString
+    val mroot = Files.createTempDirectory("graft_cnd0_m").toString
+    CheckpointedRun.run(ds, root, 2, metricsRoot = Some(mroot), convNearDup = Some(cfg))
+    val trunc = graft.io.SnapshotTable(s"$mroot/truncation", 1).read(spark)
+      .as[(String, Long, Long)].collect()
+    assert(trunc.toSeq == Seq(("cd2", 0L, 0L)))
+    assert(labeled(CheckpointedRun.readOutput(spark, root, 2)) == labeled(QualityFilter.label(ds)))
+  }
+
+  test("bucket exchange is sized per bucket: bucketed == direct with AQE on and off") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val ds = spark.createDataset(TranscriptGen.generateLocal(60, seed = 13, skewCap = 200))
+    val direct = labeled(QualityFilter.label(ds))
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val prior = keys.map(spark.conf.get)
+    // Spark's default count: with a fixed-count exchange every bucket
+    // ran 200 reduce tasks and wrote up to 200 files
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try {
+      for (aqe <- Seq(true, false)) {
+        spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+        val root = Files.createTempDirectory("graft_ckpt_aqe").toString
+        CheckpointedRun.run(ds, root, 3)
+        assert(labeled(CheckpointedRun.readOutput(spark, root, 3)) == direct, s"AQE $aqe")
+        if (aqe) {
+          val tbl = graft.io.SnapshotTable(root, 3)
+          val files = tbl.filesAt(tbl.currentVersion).groupBy(_.bucket)
+          assert(files.keySet == Set(0, 1, 2))
+          assert(files.values.forall(_.size <= 8),
+            s"files per bucket: ${files.map { case (b, fs) => b -> fs.size }}")
+        }
+      }
+    } finally keys.zip(prior).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 }

@@ -71,5 +71,17 @@ class MetricsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Metrics.truncationMetrics(cleanPairs, Seq("nope"))
     }
+
+    // an observe node the optimizer prunes from the executed plan (a
+    // join with an empty side drops the observed side) still reports
+    // its real aggregates, not zeros
+    import org.apache.spark.sql.functions.{lit, sum}
+    val observed = spark.range(10).toDF("x").observe("t_buckets",
+      sum(lit(1L)).as("capped_buckets"), sum(lit(2L)).as("dropped_ids"))
+    val pruned = observed.join(Seq.empty[Long].toDF("x"), "x")
+    val recovered = Metrics.truncationMetrics(pruned, Seq("t"))
+      .as[(String, Long, Long)].collect()
+    assert(recovered.toSeq == Seq(("t", 10L, 20L)))
+    assert(!pruned.queryExecution.observedMetrics.contains("t_buckets"))
   }
 }

@@ -29,6 +29,19 @@ class PipelinePlanSpec extends AnyFunSuite {
     assert(exchanges == 1, s"expected 1 exchange, plan:\n$p")
   }
 
+  test("flagship exchange carries no partition count (REPARTITION_BY_COL)") {
+    // an explicit count plans REPARTITION_BY_NUM, which AQE may not
+    // coalesce: every checkpointed bucket then ran
+    // spark.sql.shuffle.partitions reduce tasks and wrote as many files
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+    val df = QualityFilter.label(TranscriptGen.generate(spark, 50, 1L, 100))
+    val origins = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.shuffleOrigin
+    }
+    assert(origins == Seq(REPARTITION_BY_COL), plan(df))
+  }
+
   test("quality filter plan has no cartesian or broadcast-nested-loop") {
     val p = plan(QualityFilter.label(TranscriptGen.generate(spark, 50, 1L, 100)))
     assert(!p.contains("CartesianProduct"))

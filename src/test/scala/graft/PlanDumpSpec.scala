@@ -10,9 +10,30 @@ import graft.pipeline.QualityFilter
 /** Dumps formatted physical plans for the flagship pipeline and key
   * queries into BENCH/PLANS.md — the reviewable "is this the plan you'd
   * want at 100 TB" artifact. Regenerated on every test run so it can't
-  * go stale.
+  * go stale, and normalized so the file changes only when a plan does:
+  * a PLANS.md diff is a plan change.
   */
 class PlanDumpSpec extends AnyFunSuite {
+
+  /** Per-JVM counters in plan text — expression ids (`#NNN`), exchange
+    * `plan_id=NNN` and lambda variable suffixes (`x_NNN`) — renumbered
+    * by first appearance; generated lambda class suffixes and object
+    * addresses dropped.
+    */
+  private def normalize(plan: String): String = {
+    def renumber(s: String, re: scala.util.matching.Regex): String = {
+      val ids = scala.collection.mutable.Map.empty[String, Int]
+      re.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+    }
+    val noLambdas = plan.replaceAll("\\$Lambda(\\$\\d+)?/0x[0-9a-f]+(@[0-9a-f]+)?", "\\$Lambda")
+    Seq("(#)(\\d+)".r, "(plan_id=)(\\d+)".r, "(lambda [A-Za-z]+_)(\\d+)".r)
+      .foldLeft(noLambdas)(renumber)
+  }
+
+  private def explain(df: org.apache.spark.sql.DataFrame): String =
+    normalize(df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)).take(12000)
 
   test("dump formatted plans") {
     val spark = TestSpark.spark
@@ -22,13 +43,16 @@ class PlanDumpSpec extends AnyFunSuite {
 
     def dump(title: String, df: org.apache.spark.sql.DataFrame, notes: String): Unit = {
       sb.append(s"\n## $title\n\n$notes\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).take(12000))
+      sb.append(explain(df))
       sb.append("\n```\n")
     }
 
-    dump("quality filter (flagship)",
-      QualityFilter.label(TranscriptGen.generate(spark, 50, 1L, 100)),
+    // the same plan built twice (fresh expression ids, plan ids and
+    // lambda names) dumps byte-identically
+    def flagship = QualityFilter.label(TranscriptGen.generate(spark, 50, 1L, 100))
+    assert(explain(flagship) == explain(flagship))
+
+    dump("quality filter (flagship)", flagship,
       """One `Exchange hashpartitioning(conv_id)` for the whole corpus;
         |two intra-partition sorts (dup window on (conv_id, norm_hash,
         |turn_idx), then sequence+vote windows share (conv_id,
