@@ -74,53 +74,30 @@ object CheckpointedRun {
     }
     val todo = (0 until nBuckets).filterNot(done)
 
-    // Fully-committed no-op resume: nothing will be relabeled, so the
-    // expensive CORPUS passes (full-corpus model scoring for the IQR
-    // bounds) exist only to rebuild labeling.cfg's computed values for
-    // the guard comparison. Compare the recorded parameters instead
-    // and return — same failure semantics on a parameter mismatch,
-    // zero corpus passes when the table is already complete. The
-    // decontamination line keeps its CONTENT check: the bench
-    // fingerprint scans only the (small by design) eval set, so a
-    // rewritten-under-the-table eval set still fails even the no-op
-    // resume; only the ppl_iqr bounds narrow to a k-only compare here
-    // (recomputing them IS the full-corpus pass being skipped).
-    if (todo.isEmpty) {
-      val cfgFile = java.nio.file.Paths.get(outRoot, "_graft", "labeling.cfg")
-      if (java.nio.file.Files.exists(cfgFile)) {
-        val prior = new String(java.nio.file.Files.readAllBytes(cfgFile),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        val lines = prior.linesIterator.toSeq
-        def line(prefix: String): Option[String] = lines.find(_.startsWith(prefix))
-        val cndOk = convNearDup match {
-          case Some(c) => line("conv_neardup=").contains(
-            s"conv_neardup=${c.numHashes},${c.bands},${c.shingleK},${c.threshold},${c.maxBucket}")
-          case None => line("conv_neardup=").forall(_ == "conv_neardup=off")
-        }
-        val bpOk = boilerplate match {
-          case Some(b) => line("boilerplate=").contains(s"boilerplate=${b.minConvs},${b.minLen}")
-          case None => line("boilerplate=").isEmpty
-        }
-        val iqrOk = pplIqrK match {
-          case Some(k) => line("ppl_iqr=").exists(_.startsWith(s"ppl_iqr=$k,"))
-          case None => line("ppl_iqr=").isEmpty
-        }
-        val ctOk = decontaminate match {
-          case Some(d) =>
-            val (nGrams, xorSig) = graft.ops.Decontaminate.benchFingerprint(
-              input.sparkSession.read.parquet(d.benchPath), d.benchTextCol, d.n)
-            line("decontaminate=").contains(
-              s"decontaminate=${d.n},${d.minMatches},${d.benchTextCol}," +
-                s"$nGrams:${java.lang.Long.toHexString(xorSig)},${d.benchPath}")
-          case None => line("decontaminate=").isEmpty
-        }
-        require(cndOk && bpOk && iqrOk && ctOk,
-          s"output table $outRoot was produced under '$prior' but this " +
-            "fully-committed resume asks for different labeling settings — " +
-            "finish the run with the original setting or start a fresh output root")
-        return RunResult(table.currentVersion, Seq.empty, done.toSeq.sorted)
-      }
-    }
+    // LABEL-SEMANTICS guard (LabelingCfg): while any bucket is
+    // committed, this run's settings must match the recorded ones. The
+    // settings are checked here, before any corpus pass; only the IQR
+    // bounds need the scoring pass and are compared once computed.
+    // (skew-max-turns is NOT recorded: the split changes the plan,
+    // never the labels — CheckpointSpec pins split == unsplit.)
+    val prior = LabelingCfg.read(outRoot)
+    val committed = table.completedBuckets.nonEmpty
+    def guard(cfg: LabelingCfg): Unit =
+      require(!committed || cfg.agrees(prior.getOrElse(LabelingCfg.Off)),
+        s"output table $outRoot was produced under " +
+          s"'${prior.getOrElse(s"${LabelingCfg.Off} (no labeling.cfg: pre-guard table)")}' " +
+          s"but this run asks for '${cfg.render}' — finish the run with the " +
+          "original settings or start a fresh output root")
+    val settings = LabelingCfg(convNearDup, boilerplate, pplIqrK,
+      decontaminate.map(d => d -> graft.ops.Decontaminate.benchFingerprint(
+        input.sparkSession.read.parquet(d.benchPath), d.benchTextCol, d.n)))
+    guard(settings)
+
+    // Fully-committed no-op resume: nothing will be relabeled and the
+    // settings match, so return before the corpus passes — their only
+    // remaining use would be recomputing the IQR bounds for the guard.
+    if (todo.isEmpty && prior.isDefined)
+      return RunResult(table.currentVersion, Seq.empty, done.toSeq.sorted)
 
     // opt-in IQR perplexity bounds (the A8 outlier rule on the model
     // score): quartiles are a whole-corpus statistic, so the bounds are
@@ -128,113 +105,30 @@ object CheckpointedRun {
     // would give each bucket different drop thresholds, breaking the
     // bucketed == direct invariant. Scoring is the engine's dominant
     // map cost, so the scored frame is PERSISTED and reused: the
-    // quartile passes read it, and every bucket labels from it via the
-    // labelScored seam instead of re-scoring its rows (round 6 paid a
-    // second full-corpus model pass here). Deterministic either way
-    // (exact histogram-selection percentiles), so a resume recomputes
-    // the identical bounds and labeling.cfg's recorded copy below
-    // fails fast if it somehow doesn't (changed corpus, changed k).
+    // quartile passes read it, and every bucket labels from it instead
+    // of re-scoring its rows. Deterministic (exact histogram-selection
+    // percentiles), so a resume recomputes the identical bounds and the
+    // recorded copy fails the guard if it somehow doesn't (changed
+    // corpus).
     val scoredForIqr: Option[Dataset[graft.schema.ScoredTurn]] = pplIqrK.map { _ =>
       QualityFilter.score(input)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    val pplBounds: Option[(Double, Double)] =
-      (pplIqrK, scoredForIqr) match {
-        case (Some(k), Some(s)) => Some(QualityFilter.pplIqrBounds(s, k))
-        case _ => None
-      }
+    val pplBounds = for (k <- pplIqrK; s <- scoredForIqr)
+      yield QualityFilter.pplIqrBounds(s, k)
+    val recorded = settings.copy(pplBounds = pplBounds)
+    guard(recorded)
+    recorded.write(outRoot)
 
-    // opt-in decontamination: fingerprint the bench gram set up front —
-    // the guard below records CONTENT (count + xor of gram hashes), not
-    // just the path, so an eval set rewritten under the table between
-    // runs fails the resume instead of silently mixing label semantics
-    // per bucket (the same reason ppl_iqr records its computed bounds).
-    val ctFingerprint: Option[(Long, Long)] = decontaminate.map { d =>
-      graft.ops.Decontaminate.benchFingerprint(
-        input.sparkSession.read.parquet(d.benchPath), d.benchTextCol, d.n)
-    }
-
-    // LABEL-SEMANTICS guard: every opt-in (conv-near-dup, boilerplate,
-    // IQR ppl bounds, decontamination) changes what the committed
-    // labels MEAN, so a resume must run with the same settings the
-    // committed buckets were produced under — otherwise the table
-    // silently mixes semantics per bucket. The first run records the
-    // settings next to the manifests; later runs must match them while
-    // any bucket is already committed. (skew-max-turns is NOT recorded:
-    // the split changes the plan, never the labels — CheckpointSpec
-    // pins split == unsplit.)
-    locally {
-      import java.nio.charset.StandardCharsets.UTF_8
-      val cfgFile = java.nio.file.Paths.get(outRoot, "_graft", "labeling.cfg")
-      // the boilerplate line is appended ONLY when the rule is on, so
-      // tables produced before the rule existed still resume cleanly
-      // with it off — and any on/off mismatch still fails the guard
-      val cfgStr = (convNearDup match {
-        case Some(c) =>
-          s"conv_neardup=${c.numHashes},${c.bands},${c.shingleK},${c.threshold},${c.maxBucket}"
-        case None => "conv_neardup=off"
-      }) + (boilerplate match {
-        case Some(b) => s"\nboilerplate=${b.minConvs},${b.minLen}"
-        case None => ""
-      }) + ((pplIqrK, pplBounds) match {
-        // the COMPUTED bounds are recorded, not just k: a resume whose
-        // recomputation lands different bounds (corpus changed under
-        // the table) must fail the guard, not silently relabel
-        case (Some(k), Some((lo, hi))) => s"\nppl_iqr=$k,$lo,$hi"
-        case _ => ""
-      }) + ((decontaminate, ctFingerprint) match {
-        case (Some(d), Some((nGrams, xorSig))) =>
-          require(!d.benchPath.contains("\n"),
-            "decontamination bench path must not contain newlines (labeling.cfg is line-oriented)")
-          s"\ndecontaminate=${d.n},${d.minMatches},${d.benchTextCol}," +
-            s"$nGrams:${java.lang.Long.toHexString(xorSig)},${d.benchPath}"
-        case _ => ""
-      })
-      if (java.nio.file.Files.exists(cfgFile)) {
-        val prior = new String(java.nio.file.Files.readAllBytes(cfgFile), UTF_8).trim
-        require(prior == cfgStr || table.completedBuckets.isEmpty,
-          s"output table $outRoot was partially produced under '$prior' but this " +
-            s"run asks for '$cfgStr' — finish the run with the original setting " +
-            "or start a fresh output root")
-      } else {
-        // no labeling.cfg but committed buckets: a table produced before
-        // this guard existed (or via direct SnapshotTable use) carries
-        // the documented pre-rule default semantics — every opt-in off.
-        // Resuming with any opt-in ON would mix label semantics per
-        // bucket, the exact failure the guard prevents.
-        require(table.completedBuckets.isEmpty ||
-            (convNearDup.isEmpty && boilerplate.isEmpty &&
-              pplIqrK.isEmpty && decontaminate.isEmpty),
-          s"output table $outRoot has committed buckets but no labeling.cfg " +
-            "(pre-guard table: all opt-in rules off) — this run enables an " +
-            "opt-in rule; finish with the rules off or start a fresh output root")
-      }
-      java.nio.file.Files.write(cfgFile, cfgStr.getBytes(UTF_8))
-    }
-
-    // ONE census over the remaining corpus locates giant conversations
-    // for every to-do bucket (SkewSplit would otherwise census per
-    // bucket — nBuckets extra full-input jobs); buckets with no giants
-    // run the standard path with zero split overhead. The collect is
-    // LIMIT-bounded like SkewSplit.label's: when the corpus is so
-    // degenerate that giants exceed the bound, every bucket takes the
-    // join-based split instead of pulling an unbounded id list to the
-    // driver (a guard applied after an unbounded collect would OOM
-    // before it ran).
-    val (giantsByBucket: Map[Int, Array[String]], censusOverflow: Boolean) =
-      if (skewMaxTurns <= 0 || todo.isEmpty) (Map.empty[Int, Array[String]], false)
-      else {
-        import input.sparkSession.implicits._
-        val rows = input.groupBy(col("conv_id")).agg(count(lit(1)).as("n_turns"))
-          .where(col("n_turns") > skewMaxTurns)
-          .select(col("conv_id"), bucket.cast("int").as("b"))
-          .limit(maxCollectedGiants + 1)
-          .as[(String, Int)].collect()
-        if (rows.length > maxCollectedGiants)
-          (Map.empty[Int, Array[String]], true)
-        else
-          (rows.groupBy(_._2).map { case (b, rs) => b -> rs.map(_._1) }, false)
-      }
+    // ONE census over the corpus locates giant conversations for every
+    // to-do bucket (a census per bucket would be nBuckets extra
+    // full-input jobs); buckets with no giants run the standard path
+    // with zero split overhead. None = the census overflowed: every
+    // bucket then matches giants with an IN-subquery instead of an
+    // inlined list.
+    val giants: Option[Map[Int, Array[String]]] =
+      if (skewMaxTurns <= 0 || todo.isEmpty) Some(Map.empty)
+      else SkewSplit.giantCensus(input, skewMaxTurns, maxCollectedGiants, bucket)
 
     // opt-in conversation near-dup: near-dup PAIRS cross conv-hash
     // buckets, so the dropped-conversation set is computed ONCE over
@@ -285,32 +179,13 @@ object CheckpointedRun {
       d
     }
 
+    // with IQR on, every bucket labels from the persisted scored frame;
+    // otherwise the bucket filter and routing push below the scoring
+    // projection, so each bucket scores only its own rows
+    val scored = scoredForIqr.getOrElse(QualityFilter.score(input))
     todo.foreach { b =>
-      val bucketInput = input.where(bucket === b)
-      // with IQR on, label each bucket from the persisted scored frame
-      // (scored exactly once, above) instead of re-scoring its rows;
-      // scoring is per-row pure, so the results are identical
-      // (CheckpointSpec pins bucketed == direct on both paths)
-      val base = scoredForIqr match {
-        case Some(s) =>
-          import input.sparkSession.implicits._
-          val sb = s.where(bucket === b).as[graft.schema.ScoredTurn]
-          if (skewMaxTurns <= 0) QualityFilter.labelScored(sb, pplBounds)
-          else if (censusOverflow)
-            SkewSplit.labelViaJoinsScored(sb, skewMaxTurns, pplBounds)
-          else SkewSplit.labelWithGiantsScored(sb, skewMaxTurns,
-            giantsByBucket.getOrElse(b, Array.empty), pplBounds)
-        case None =>
-          if (skewMaxTurns <= 0)
-            QualityFilter.label(bucketInput, skewMaxTurns = 0, pplBounds)
-          // censusOverflow: the corpus-wide giant count exceeded the
-          // bound, so no bucket gets an inlined isin literal list (plan
-          // size / driver memory) — all take the join-based split
-          else if (censusOverflow)
-            SkewSplit.labelViaJoins(bucketInput, skewMaxTurns, pplBounds)
-          else SkewSplit.labelWithGiants(bucketInput, skewMaxTurns,
-            giantsByBucket.getOrElse(b, Array.empty), pplBounds)
-      }
+      val base = SkewSplit.route(scored.where(bucket === b), skewMaxTurns,
+        giants.map(_.getOrElse(b, Array.empty[String])), pplBounds)
       // composition order = lineage order: boilerplate then
       // decontamination (turn-level) before conv-near-dup
       // (conversation-level) — finer-grained reasons first

@@ -214,16 +214,22 @@ object QualityFilter {
     * allows (no hard hint — on a clone-heavy corpus the set is
     * O(#conversations)).
     */
-  def withConvNearDup(labeled: DataFrame, droppedConvs: DataFrame): DataFrame = {
-    val flagged = droppedConvs.select(col("conv_id"), lit(true).as("__cnd"))
-    labeled.join(flagged, Seq("conv_id"), "left")
+  def withConvNearDup(labeled: DataFrame, droppedConvs: DataFrame): DataFrame =
+    withFlag(labeled, droppedConvs.select(col("conv_id")), RuleConvNearDup)
+
+  /** Shared tail of the opt-in flag rules: rows of `labeled` matching a
+    * key row of `flagged` (joined on all of its columns) get keep=false
+    * and `rule` appended to their lineage array. `flagged` must hold
+    * each key once — the flag is set membership, never a row
+    * multiplier.
+    */
+  private def withFlag(labeled: DataFrame, flagged: DataFrame, rule: String): DataFrame =
+    labeled.join(flagged.withColumn("__flag", lit(true)), flagged.columns.toSeq, "left")
       .withColumn("drop_reasons",
-        when(col("__cnd"),
-          concat(col("drop_reasons"), array(lit(RuleConvNearDup))))
+        when(col("__flag"), concat(col("drop_reasons"), array(lit(rule))))
           .otherwise(col("drop_reasons")))
-      .withColumn("keep", col("keep") && !coalesce(col("__cnd"), lit(false)))
-      .drop("__cnd")
-  }
+      .withColumn("keep", col("keep") && !coalesce(col("__flag"), lit(false)))
+      .drop("__flag")
 
   /** Parameters of the OPT-IN cross-conversation boilerplate rule
     * (`drop:boilerplate` — see [[graft.rules.RuleConfig.RuleBoilerplate]]).
@@ -332,22 +338,12 @@ object QualityFilter {
     * side's hash(conv_id) partitioning already clusters the keys, only
     * the small flagged side moves.
     */
-  def withContaminated(labeled: DataFrame, droppedTurns: DataFrame): DataFrame = {
+  def withContaminated(labeled: DataFrame, droppedTurns: DataFrame): DataFrame =
     // distinct: contaminatedTurnKeys emits one row per corpus ROW (the
     // Decontaminate contract), so duplicate (conv_id, turn_idx) inputs
-    // would otherwise multiply labeled rows through the join — the
-    // flag is set membership, and the flagged side is small
-    val flagged = droppedTurns
-      .select(col("conv_id"), col("turn_idx")).distinct()
-      .withColumn("__ct", lit(true))
-    labeled.join(flagged, Seq("conv_id", "turn_idx"), "left")
-      .withColumn("drop_reasons",
-        when(col("__ct"),
-          concat(col("drop_reasons"), array(lit(RuleContaminated))))
-          .otherwise(col("drop_reasons")))
-      .withColumn("keep", col("keep") && !coalesce(col("__ct"), lit(false)))
-      .drop("__ct")
-  }
+    // would otherwise multiply labeled rows through the join
+    withFlag(labeled, droppedTurns.select(col("conv_id"), col("turn_idx")).distinct(),
+      RuleContaminated)
 
   /** Apply the opt-in boilerplate rule to a labeled frame: flagged
     * (conv_id, turn_idx) turns get keep=false and RuleBoilerplate
@@ -358,18 +354,8 @@ object QualityFilter {
     * side's existing hash(conv_id) partitioning already satisfies —
     * only the small flagged side moves.
     */
-  def withBoilerplate(labeled: DataFrame, droppedTurns: DataFrame): DataFrame = {
-    // distinct for the same reason as withContaminated: the flag is
-    // set membership, never a row multiplier under duplicate keys
-    val flagged = droppedTurns
-      .select(col("conv_id"), col("turn_idx")).distinct()
-      .withColumn("__bp", lit(true))
-    labeled.join(flagged, Seq("conv_id", "turn_idx"), "left")
-      .withColumn("drop_reasons",
-        when(col("__bp"),
-          concat(col("drop_reasons"), array(lit(RuleBoilerplate))))
-          .otherwise(col("drop_reasons")))
-      .withColumn("keep", col("keep") && !coalesce(col("__bp"), lit(false)))
-      .drop("__bp")
-  }
+  def withBoilerplate(labeled: DataFrame, droppedTurns: DataFrame): DataFrame =
+    // distinct for the same reason as withContaminated
+    withFlag(labeled, droppedTurns.select(col("conv_id"), col("turn_idx")).distinct(),
+      RuleBoilerplate)
 }

@@ -1,13 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.lang.LangId
 import graft.rules.RuleConfig._
 import graft.schema.ScoredTurn
-import graft.scrub.Scrub
 
 /** Explicit skew handling for pathological conversations (north rule:
   * "conv_id skew handled with salted repartitioning and AQE").
@@ -18,9 +17,9 @@ import graft.scrub.Scrub
   * split only fixes JOINS, not windows — so we split explicitly:
   *
   *  1. conversation sizes via groupBy(conv_id).count — partial-agg'd,
-  *     inherently skew-proof;
-  *  2. conversations ≤ maxTurns take the standard single-sort window
-  *     path ([[QualityFilter.labelScored]]);
+  *     inherently skew-proof ([[giantCensus]]);
+  *  2. [[route]] sends conversations ≤ maxTurns down the standard
+  *     single-sort window path ([[QualityFilter.labelScored]]);
   *  3. giant conversations take a range-bucketed path: turns are salted
   *     into (conv_id, turn_idx / maxTurns) buckets — windows partition
   *     on the salted key, so a 10M-turn conversation becomes many
@@ -39,113 +38,80 @@ import graft.scrub.Scrub
 object SkewSplit {
 
   /** Above this many giant conversations the collected id set stops
-    * being "tiny" and the split falls back to join routing (also the
-    * bound a bucketed runner must apply to its pre-computed giant
-    * lists — see CheckpointedRun). Overridable per call via the
-    * `maxCollectedGiants` parameter (tests exercise the overflow path
-    * with a tiny bound instead of 65k+ giant conversations).
+    * being "tiny": [[giantCensus]] reports an overflow and [[route]]
+    * matches giants with an IN-subquery instead of an inlined list.
+    * Overridable per call via the `maxCollectedGiants` parameter (tests
+    * exercise the overflow path with a tiny bound instead of 65k+ giant
+    * conversations).
     */
   private[graft] val MaxCollectedGiants = 65536
 
   def label(ds: Dataset[graft.schema.Turn], maxTurns: Int,
             pplBounds: Option[(Double, Double)] = None,
             maxCollectedGiants: Int = MaxCollectedGiants): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-
-    // size census on the RAW input: column pruning reduces the scan to
-    // conv_id only; the split happens BEFORE model scoring so each row
-    // is scored exactly once (scoring after the split would be shared
-    // by census + both branches and recomputed per consumer). The census
-    // runs EAGERLY (giant conversations are by definition few, so the
-    // id list fits the driver) and each branch filters with an InSet
-    // literal — the labeled plan carries no join exchange and no
-    // build-side rescan for the split, just the two branch scans.
-    // The collect is LIMIT-bounded: a degenerate corpus where "most
-    // conversations are giant" must hit the join fallback without ever
-    // pulling the unbounded id list to the driver (an unbounded
-    // .collect() guarded only AFTERWARDS would OOM first).
-    val giantIds = ds.groupBy($"conv_id").agg(count(lit(1)).as("n_turns"))
-      .where($"n_turns" > maxTurns).select($"conv_id")
-      .limit(maxCollectedGiants + 1)
-      .as[String].collect()
-
-    if (giantIds.length > maxCollectedGiants)
-      return labelViaJoins(ds, maxTurns, pplBounds)
-    labelWithGiants(ds, maxTurns, giantIds, pplBounds)
+    val giants = giantCensus(ds, maxTurns, maxCollectedGiants, lit(0))
+      .map(_.getOrElse(0, Array.empty[String]))
+    route(QualityFilter.score(ds), maxTurns, giants, pplBounds)
   }
 
-  /** Label with a PRE-COMPUTED giant-conversation id set — lets a
-    * bucketed runner (CheckpointedRun) census the whole corpus ONCE and
-    * route each bucket without its own census job; a bucket whose giant
-    * set is empty takes the standard path with zero split overhead.
-    */
-  def labelWithGiants(ds: Dataset[graft.schema.Turn], maxTurns: Int,
-                      giantIds: Array[String],
-                      pplBounds: Option[(Double, Double)] = None): DataFrame =
-    labelWithGiantsScored(QualityFilter.score(ds), maxTurns, giantIds, pplBounds)
+  /** Conversations of `ds` with more than `maxTurns` rows. */
+  private def giantConvs(ds: Dataset[_], maxTurns: Int): DataFrame =
+    ds.groupBy(col("conv_id")).agg(count(lit(1)).as("n_turns"))
+      .where(col("n_turns") > maxTurns).select(col("conv_id"))
 
-  /** The same routing over an ALREADY-SCORED frame — the seam that lets
-    * a runner score the corpus exactly once and reuse the scored rows
-    * for both the IQR bounds pass and every bucket's labeling
-    * (scoring is per-row pure, so score-then-split == split-then-score;
-    * the conv_id routing filters push below the scoring projection).
+  /** Giant conversation ids, grouped by `key` (an int column over
+    * conv_id, e.g. a runner's bucket column) — or None when there are
+    * more than `maxCollectedGiants` of them. Column pruning reduces the
+    * scan to conv_id, so scoring never runs here. The collect is
+    * LIMIT-bounded: a degenerate corpus where "most conversations are
+    * giant" overflows without ever pulling the unbounded id list to the
+    * driver (an unbounded collect guarded only afterwards would OOM
+    * first).
     */
-  def labelWithGiantsScored(scored: Dataset[ScoredTurn], maxTurns: Int,
-                            giantIds: Array[String],
-                            pplBounds: Option[(Double, Double)] = None): DataFrame = {
-    import scored.sparkSession.implicits._
-    if (giantIds.isEmpty)
+  private[pipeline] def giantCensus(ds: Dataset[_], maxTurns: Int,
+                                    maxCollectedGiants: Int,
+                                    key: Column): Option[Map[Int, Array[String]]] = {
+    import ds.sparkSession.implicits._
+    val rows = giantConvs(ds, maxTurns)
+      .select(col("conv_id"), key.cast("int"))
+      .limit(maxCollectedGiants + 1)
+      .as[(String, Int)].collect()
+    if (rows.length > maxCollectedGiants) None
+    else Some(rows.groupBy(_._2).map { case (k, rs) => k -> rs.map(_._1) })
+  }
+
+  /** Label a scored frame, splitting off conversations above `maxTurns`
+    * into the range-bucketed path. `giants` is the census result for
+    * exactly these rows: an empty list (or `maxTurns <= 0`) takes the
+    * standard path with zero split overhead; a list routes with an
+    * inlined InSet literal; None (census overflow) routes with an
+    * IN-subquery over this frame's own census, which plans as one
+    * ExistenceJoin per branch consumer (AQE picks broadcast vs shuffle
+    * from the runtime size — the set is large by definition here).
+    *
+    * Routing is over scored rows, yet on an unpersisted scored frame
+    * the conv_id filter (and the ExistenceJoin) push below the scoring
+    * projection — scoring is per-row pure — so each branch scores only
+    * its own rows. On a persisted frame both branches read the cached
+    * rows.
+    */
+  def route(scored: Dataset[ScoredTurn], maxTurns: Int,
+            giants: Option[Array[String]],
+            pplBounds: Option[(Double, Double)] = None): DataFrame = {
+    if (maxTurns <= 0 || giants.exists(_.isEmpty))
       return QualityFilter.labelScored(scored, pplBounds)
 
-    val inGiants = $"conv_id".isin(giantIds.toSeq: _*)
-    // null conv_id routes to the normal path (mirrors left_anti, which
-    // keeps null keys); isin is null on null input, hence the coalesces
-    val normal = scored.where(coalesce(!inGiants, lit(true))).as[ScoredTurn]
-    val giant = scored.where(coalesce(inGiants, lit(false))).as[ScoredTurn]
-
-    QualityFilter.labelScored(normal, pplBounds)
-      .unionByName(labelGiant(giant, maxTurns, pplBounds))
-  }
-
-  /** Join-based split for the degenerate case of MANY giant
-    * conversations (id set too large to inline): two joins against the
-    * census output. No hard broadcast hint — this path exists
-    * precisely because the giant set is large (up to corpus/maxTurns
-    * ids), so the broadcast-vs-shuffle call belongs to AQE's runtime
-    * size check; the downstream pipeline repartitions by conv_id
-    * anyway, so a shuffled semi-join costs no extra exchange shape.
-    */
-  private[graft] def labelViaJoins(ds: Dataset[graft.schema.Turn], maxTurns: Int,
-                                   pplBounds: Option[(Double, Double)] = None): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    // score AFTER the routing joins: each branch then scores only its
-    // own rows (a pre-join scoring projection cannot be pushed through
-    // the join and would score the full corpus once per branch)
-    val sizes = ds.groupBy($"conv_id").agg(count(lit(1)).as("n_turns"))
-    val giants = sizes.where($"n_turns" > maxTurns).select($"conv_id")
-    val normal = ds.join(giants, Seq("conv_id"), "left_anti")
-    val giant = ds.join(giants, Seq("conv_id"), "left_semi")
-    QualityFilter.labelScored(QualityFilter.score(normal.as[graft.schema.Turn]), pplBounds)
-      .unionByName(labelGiant(QualityFilter.score(giant.as[graft.schema.Turn]),
-        maxTurns, pplBounds))
-  }
-
-  /** Join-based split over an already-scored frame (see
-    * [[labelWithGiantsScored]]). Callers must pass a PERSISTED scored
-    * frame — the two routing joins re-evaluate their input, which on an
-    * unpersisted frame would re-score the full corpus per branch.
-    */
-  private[graft] def labelViaJoinsScored(scored: Dataset[ScoredTurn], maxTurns: Int,
-                                         pplBounds: Option[(Double, Double)] = None): DataFrame = {
-    import scored.sparkSession.implicits._
-    val sizes = scored.groupBy($"conv_id").agg(count(lit(1)).as("n_turns"))
-    val giants = sizes.where($"n_turns" > maxTurns).select($"conv_id")
-    val normal = scored.join(giants, Seq("conv_id"), "left_anti").as[ScoredTurn]
-    val giant = scored.join(giants, Seq("conv_id"), "left_semi").as[ScoredTurn]
-    QualityFilter.labelScored(normal, pplBounds)
-      .unionByName(labelGiant(giant, maxTurns, pplBounds))
+    val inGiants = giants match {
+      case Some(ids) => col("conv_id").isin(ids.toSeq: _*)
+      case None => col("conv_id").isin(giantConvs(scored, maxTurns))
+    }
+    // null conv_id routes to the normal path: IN is null on null input,
+    // hence the coalesce. The normal branch negates the coalesced flag —
+    // `coalesce(NOT IN, true)` would plan a null-aware
+    // BroadcastNestedLoopJoin for the subquery form
+    val isGiant = coalesce(inGiants, lit(false))
+    QualityFilter.labelScored(scored.where(!isGiant), pplBounds)
+      .unionByName(labelGiant(scored.where(isGiant), maxTurns, pplBounds))
   }
 
   private def eligible = !col("is_empty") &&

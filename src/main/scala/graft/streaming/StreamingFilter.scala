@@ -46,8 +46,9 @@ final case class StatefulScoredTurn(
   * evaluator never fires them (and the turn-level language rule drops
   * only on its own confidence).
   *
-  * The scoring pass (broadcast models, mapPartitions) is the same code
-  * as batch — mapPartitions is streaming-safe (no state).
+  * The scoring pass is the same code as batch: [[QualityFilter.score]]'s
+  * fused ScoreAllExpr projection — a per-row expression, so
+  * streaming-safe (no state).
   */
 object StreamingFilter {
 
@@ -109,9 +110,9 @@ object StreamingFilter {
     val langs = graft.lang.LangId.default.langs.toSeq.sorted
     val ttlMs = org.apache.spark.sql.catalyst.util.IntervalUtils
       .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(stateTtl))
-    // watermark AFTER the scoring pass: the object-level mapPartitions
-    // re-creates the ts attribute, which would drop the event-time
-    // watermark tag the stateful operator requires
+    // the watermark tags the SCORED frame's ts (the scoring projection
+    // passes ts through unchanged) — the frame the stateful operator
+    // below consumes
     val scored = QualityFilter.score(stream)
       .withWatermark("ts", watermarkDelay).as[ScoredTurn]
 

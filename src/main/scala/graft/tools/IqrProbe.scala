@@ -12,8 +12,8 @@ import graft.schema.Turn
   *
   *   runMain graft.tools.IqrProbe [nConvs] [cores] [nBuckets]
   *
-  * Reuses PipeProbe's cached corpus. Prints wall-clock for (a) the run,
-  * (b) the no-op resume.
+  * Generates its corpus once and caches it as parquet. Prints wall-clock
+  * for (a) the run, (b) the no-op resume.
   */
 object IqrProbe {
   def main(args: Array[String]): Unit = {

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TranscriptGen
 import graft.metrics.Metrics
-import graft.pipeline.{CheckpointedRun, QualityFilter}
+import graft.pipeline.{CheckpointedRun, LabelingCfg, QualityFilter}
 import graft.schema.LabeledTurn
 
 /** Snapshot-checkpoint resume (north rule): a run that stops after some
@@ -525,5 +525,117 @@ class CheckpointSpec extends AnyFunSuite {
         }
       }
     } finally keys.zip(prior).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("labeling.cfg keeps its on-disk format; a table with the all-off file resumes") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // the exact strings earlier releases wrote: the codec must keep them
+    assert(LabelingCfg(None, None, None, None).render == "conv_neardup=off")
+    val allOn = LabelingCfg(Some(QualityFilter.ConvNearDupConfig()),
+      Some(QualityFilter.BoilerplateConfig()), Some(1.5),
+      Some(QualityFilter.ContaminationConfig(benchPath = "/data/eval set") -> ((12L, -2L))),
+      Some((-0.25, 40.125)))
+    assert(allOn.render == "conv_neardup=64,16,3,0.7,256\nboilerplate=2,16\n" +
+      "ppl_iqr=1.5,-0.25,40.125\ndecontaminate=8,1,text,12:fffffffffffffffe,/data/eval set")
+    // before the bounds are computed, ppl_iqr compares k only
+    assert(allOn.copy(pplBounds = None).agrees(allOn.render))
+    assert(!allOn.copy(pplIqrK = Some(3.0), pplBounds = None).agrees(allOn.render))
+    assert(!allOn.agrees(allOn.render.replace("40.125", "40.5")))
+
+    // a partially committed table carrying the all-off file resumes
+    val ds = spark.createDataset(TranscriptGen.generateLocal(30, seed = 27, skewCap = 200))
+    val root = Files.createTempDirectory("graft_cfg_golden").toString
+    val table = graft.io.SnapshotTable(root, 2)
+    table.commitBucket(QualityFilter.label(ds.where(Metrics.bucketCol(2) === 0)), 0)
+    Files.write(java.nio.file.Paths.get(root, "_graft", "labeling.cfg"),
+      "conv_neardup=off".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val res = CheckpointedRun.run(ds, root, 2)
+    assert(res.bucketsComputed == Seq(1) && res.bucketsSkipped == Seq(0))
+    assert(labeled(CheckpointedRun.readOutput(spark, root, 2)) == labeled(QualityFilter.label(ds)))
+    assert(LabelingCfg.read(root).contains("conv_neardup=off"))
+  }
+
+  test("partially committed table: a changed opt-in fails before any corpus pass, unchanged resume == direct") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // all four opt-ins fire on this corpus: a canned opening line
+    // (boilerplate), a leaked eval phrase (decontamination), verbatim
+    // clones (conv near-dup), and IQR ppl bounds
+    val canned = "this conversation may be recorded for quality assurance purposes"
+    val leak = "the quick zephyr vexes the jaded dwarf mightily"
+    val base = TranscriptGen.generateLocal(40, seed = 25, skewCap = 200).map { t =>
+      if (t.conv_id.endsWith("3") && t.turn_idx == 0) t.copy(text = canned)
+      else if (t.conv_id.endsWith("4") && t.turn_idx == 1)
+        t.copy(text = s"as we said before $leak and nothing else matters")
+      else t
+    }
+    val turns = base ++ base.filter(_.conv_id.endsWith("0"))
+      .map(t => t.copy(conv_id = "d" + t.conv_id))
+    val ds = spark.createDataset(turns)
+    val benchDir = Files.createTempDirectory("graft_guard_bench").toString
+    Seq(s"eval prompt one $leak", "eval prompt two entirely clean")
+      .toDF("text").write.mode("overwrite").parquet(benchDir)
+    val nd = QualityFilter.ConvNearDupConfig()
+    val bp = QualityFilter.BoilerplateConfig()
+    val ct = QualityFilter.ContaminationConfig(benchPath = benchDir)
+    val root = Files.createTempDirectory("graft_guard").toString
+    def run(in: org.apache.spark.sql.Dataset[graft.schema.Turn],
+            nd: QualityFilter.ConvNearDupConfig = nd,
+            bp: QualityFilter.BoilerplateConfig = bp, k: Double = 1.5,
+            ct: QualityFilter.ContaminationConfig = ct,
+            after: Int => Unit = _ => ()) =
+      CheckpointedRun.run(in, root, 4, convNearDup = Some(nd), boilerplate = Some(bp),
+        pplIqrK = Some(k), decontaminate = Some(ct), afterDataCommit = after)
+
+    // crash right after bucket 0's data commit
+    final class Crash extends RuntimeException("simulated crash")
+    intercept[Crash] { run(ds, after = b => if (b == 0) throw new Crash) }
+    assert(graft.io.SnapshotTable(root, 4).completedBuckets == Set(0))
+    val bounds = QualityFilter.pplIqrBounds(QualityFilter.score(ds), 1.5)
+    val (nGrams, xorSig) = graft.ops.Decontaminate.benchFingerprint(
+      spark.read.parquet(benchDir), "text", 8)
+    val recorded = "conv_neardup=64,16,3,0.7,256\nboilerplate=2,16\n" +
+      s"ppl_iqr=1.5,${bounds._1},${bounds._2}\n" +
+      s"decontaminate=8,1,text,$nGrams:${java.lang.Long.toHexString(xorSig)},$benchDir"
+    assert(LabelingCfg.read(root).contains(recorded))
+
+    // each changed opt-in fails in the settings guard, before any corpus
+    // pass: every job over this input throws
+    val poisoned = ds.map[graft.schema.Turn]((_: graft.schema.Turn) =>
+      throw new IllegalStateException("corpus pass before the settings guard"))
+    Seq[(String, () => Any)](
+      "conv_neardup" -> (() => run(poisoned, nd = nd.copy(threshold = 0.9))),
+      "boilerplate" -> (() => run(poisoned, bp = bp.copy(minConvs = 3))),
+      "ppl_iqr" -> (() => run(poisoned, k = 3.0)),
+      "decontaminate" -> (() => run(poisoned, ct = ct.copy(minMatches = 3)))
+    ).foreach { case (rule, resume) =>
+      val e = intercept[IllegalArgumentException](resume())
+      assert(e.getMessage.contains("was produced under"), s"$rule: ${e.getMessage}")
+    }
+    assert(LabelingCfg.read(root).contains(recorded))
+
+    // recorded bounds that the recomputation does not land fail the
+    // guard once the scoring pass has computed them
+    val cfgFile = java.nio.file.Paths.get(root, "_graft", "labeling.cfg")
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val tampered = recorded.replace(s"ppl_iqr=1.5,${bounds._1},", s"ppl_iqr=1.5,${bounds._1 - 1},")
+    assert(tampered != recorded)
+    Files.write(cfgFile, tampered.getBytes(utf8))
+    intercept[IllegalArgumentException](run(ds))
+    Files.write(cfgFile, recorded.getBytes(utf8))
+
+    val res = run(ds)
+    assert(res.bucketsComputed == Seq(1, 2, 3) && res.bucketsSkipped == Seq(0))
+    val direct = labeled(QualityFilter.withConvNearDup(
+      QualityFilter.withContaminated(
+        QualityFilter.withBoilerplate(
+          QualityFilter.label(ds, skewMaxTurns = 0, Some(bounds)),
+          QualityFilter.boilerplateDropKeysRaw(ds, bp)),
+        QualityFilter.contaminatedTurnKeys(ds.toDF(), spark.read.parquet(benchDir), ct)),
+      QualityFilter.convNearDupDropIds(ds.toDF(), nd)))
+    Seq("boilerplate", "contaminated", "conv_neardup", "perplexity").foreach(r =>
+      assert(direct.exists(_.drop_reasons.contains(r)), s"$r never fires"))
+    assert(labeled(CheckpointedRun.readOutput(spark, root, 4)) == direct)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TranscriptGen
-import graft.pipeline.QualityFilter
+import graft.pipeline.{QualityFilter, SkewSplit}
 import graft.oracle.OracleFilter
 import graft.schema.LabeledTurn
 
@@ -76,7 +76,8 @@ class SkewSpec extends AnyFunSuite {
     val turns = TranscriptGen.generateLocal(120, seed = 55, skewCap = 400)
     val ds = spark.createDataset(turns).repartition(5)
     val expected = OracleFilter.run(turns).map(normalize)
-    val viaJoins = graft.pipeline.SkewSplit.labelViaJoins(ds, 25).as[LabeledTurn]
+    val viaJoins = SkewSplit.route(QualityFilter.score(ds), 25, giants = None)
+      .as[LabeledTurn]
       .collect().sortBy(t => (t.conv_id, t.turn_idx)).map(normalize)
     assert(viaJoins.toSeq == expected)
   }
@@ -95,11 +96,11 @@ class SkewSpec extends AnyFunSuite {
     val nGiants = turns.groupBy(_.conv_id).count(_._2.size > maxTurns)
     assert(nGiants > 3, s"fixture needs >3 giants, got $nGiants")
 
-    val labeled = graft.pipeline.SkewSplit.label(ds, maxTurns,
-      maxCollectedGiants = 3)
+    val labeled = SkewSplit.label(ds, maxTurns, maxCollectedGiants = 3)
     val plan = labeled.queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi") && plan.contains("LeftAnti"),
-      s"overflow did not route via joins:\n${plan.take(2000)}")
+    assert(plan.contains("ExistenceJoin") && !plan.contains("LeftSemi") &&
+        !plan.contains("LeftAnti") && !plan.contains("BroadcastNestedLoopJoin"),
+      s"overflow did not route both branches via IN-subquery joins:\n${plan.take(2000)}")
     val got = labeled.as[LabeledTurn].collect()
       .sortBy(t => (t.conv_id, t.turn_idx)).map(normalize)
     assert(got.toSeq == expected)
@@ -113,5 +114,49 @@ class SkewSpec extends AnyFunSuite {
       .as[LabeledTurn].collect()
       .sortBy(t => (t.conv_id, t.turn_idx)).map(normalize)
     assert(ckpt.toSeq == expected)
+  }
+
+  test("overflow route: scoring stays above the IN-subquery join, null conv_id routes normal") {
+    import org.apache.spark.sql.catalyst.plans.ExistenceJoin
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val maxTurns = 8
+    // null out one GIANT conversation's id: the census subquery then
+    // holds a null id, and IN must still never match a null conv_id
+    val base = TranscriptGen.generateLocal(60, seed = 91, skewCap = 60)
+    val nulled = base.groupBy(_.conv_id)
+      .collectFirst { case (c, ts) if ts.size > maxTurns => c }.get
+    val turns = base.map(t => if (t.conv_id == nulled) t.copy(conv_id = null) else t)
+    // repartitioned: over a bare local relation the optimizer would
+    // fold the scoring projection into the scan
+    val ds = spark.createDataset(turns).repartition(4)
+
+    val routed = SkewSplit.route(QualityFilter.score(ds), maxTurns, giants = None)
+    val plan = routed.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    def scores(p: SparkPlan): Boolean = p match {
+      case pr: ProjectExec => pr.projectList.exists(_.toString.contains("scoreallexpr"))
+      case _ => false
+    }
+    val routing = helper.collect(plan) {
+      case j: BaseJoinExec if j.joinType.isInstanceOf[ExistenceJoin] => j
+    }
+    // every routing join reads UNSCORED rows: the scoring projection
+    // sits above it, so each row is scored after routing
+    assert(routing.nonEmpty, plan.toString)
+    assert(routing.forall(j => !j.exists(scores)), plan.toString)
+    assert(helper.find(plan)(scores).isDefined, plan.toString)
+    assert(!plan.toString.contains("BroadcastNestedLoopJoin"), plan.toString)
+
+    // the giant branch's boundary equi-join would drop null-keyed rows;
+    // every one of them comes back, labeled exactly as unsplit
+    def canon(df: org.apache.spark.sql.DataFrame) = df.as[LabeledTurn].collect()
+      .sortBy(t => (Option(t.conv_id), t.turn_idx)).map(normalize).toSeq
+    val got = canon(routed)
+    assert(got.count(_.conv_id == null) == turns.count(_.conv_id == null))
+    assert(got == canon(QualityFilter.label(ds)))
   }
 }
