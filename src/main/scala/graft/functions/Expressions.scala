@@ -153,31 +153,40 @@ object GraftExpressions {
   private val MaxSentinelLen: Int =
     graft.rules.RuleConfig.Sentinels.map(_.length).max
 
-  /** Whitespace-normalize + fused model scoring (language-ID +
-    * perplexity over the dense union tables) + per-turn text metrics in
-    * ONE pass — the score stage as a codegen expression instead of a
-    * mapPartitions object pass: no Turn/ScoredTurn (de)serialization,
-    * and the scan → projection → exchange pipeline stays inside
-    * whole-stage codegen. Calls exactly the functions the object pass
-    * called (Scrub.normalizeWsPlain, TurnScorer.score,
-    * TextAlgos.turnMetrics), so every produced value is bit-identical.
-    * Returns struct<lang, lang_conf, ppl, norm_len, norm_hash,
-    * is_empty, sym_density, rep_ratio>.
+  /** Whitespace-normalized text with its `norm_len` and `is_empty`: the
+    * one derivation behind both the scoring projection ([[scoreAll]])
+    * and the raw boilerplate census
+    * (QualityFilter.boilerplateDropKeysRaw), so the two can never
+    * disagree on which turns are empty or how long they are.
     */
-  def scoreAll(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-    val raw = if (s == null) null else s.toString
+  private[graft] def normalized(raw: String): (String, Int, Boolean) = {
     val norm = graft.scrub.Scrub.normalizeWsPlain(raw)
     // length guard: Set.contains hashes its argument, an O(len) pass
     // wasted on every ordinary turn — no sentinel is longer than
     // MaxSentinelLen, so longer texts skip the lookup (same result)
     val isEmpty = raw == null || (norm.length <= MaxSentinelLen &&
       graft.rules.RuleConfig.Sentinels.contains(norm))
+    (norm, if (norm == null) 0 else norm.length, isEmpty)
+  }
+
+  /** Whitespace-normalize + fused model scoring (language-ID +
+    * perplexity over the dense union tables) + per-turn text metrics in
+    * ONE pass — the score stage as a codegen expression instead of a
+    * mapPartitions object pass: no Turn/ScoredTurn (de)serialization,
+    * and the scan → projection → exchange pipeline stays inside
+    * whole-stage codegen. Calls exactly the functions the object pass
+    * called ([[normalized]], TurnScorer.score, TextAlgos.turnMetrics),
+    * so every produced value is bit-identical. Returns struct<lang,
+    * lang_conf, ppl, norm_len, norm_hash, is_empty, sym_density,
+    * rep_ratio>.
+    */
+  def scoreAll(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+    val (norm, normLen, isEmpty) = normalized(if (s == null) null else s.toString)
     val (lang, conf, ppl) = graft.lm.TurnScorer.default.score(norm)
     val (symD, hash, rep) =
       TextAlgos.turnMetrics(norm, graft.rules.RuleConfig.RepetitionOrder)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-      UTF8String.fromString(lang), conf, ppl,
-      if (norm == null) 0 else norm.length, hash, isEmpty, symD, rep))
+      UTF8String.fromString(lang), conf, ppl, normLen, hash, isEmpty, symD, rep))
   }
 
   // ------------------------------------------------------- Column API

@@ -92,13 +92,13 @@ object TextAlgos {
     seen.reset(math.min(total, 1 << 16))
     var i = 0
     var distinct = 0
-    while (i < total) {
+    try while (i < total) {
       var h = 1125899906842597L
       var j = 0
       while (j < n) { h = 31L * h + s.charAt(i + j); j += 1 }
       if (seen.add(h)) distinct += 1
       i += 1
-    }
+    } finally seen.release()
     distinct.toDouble / total.toDouble
   }
 
@@ -220,23 +220,6 @@ object TextAlgos {
     z ^ (z >>> 31)
   }
 
-  /** 64-bit fingerprint of a string (FNV-1a over UTF-16 code units,
-    * then mixed). Deterministic across JVMs (no String.hashCode reliance
-    * on anything version-specific — String.hashCode is actually spec'd,
-    * but we keep our own for clarity and 64 bits).
-    */
-  def hash64(s: String): Long = {
-    if (s == null) return 0L
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) {
-      h ^= s.charAt(i).toLong
-      h *= 0x100000001b3L
-      i += 1
-    }
-    mix64(h)
-  }
-
   /** Rolling polynomial document fingerprint over whitespace-normalized
     * lowercase tokens (document fingerprinting for near-dup candidate
     * keys). Pure function of token content — insensitive to extra
@@ -306,7 +289,8 @@ object TextAlgos {
 
   /** FNV-1a over tokens[from, until) of `lower` joined by SINGLE
     * SPACES (separator between tokens, none trailing), then mix64 —
-    * equals hash64 of the joined string without materializing it.
+    * equals [[turnMetrics]]'s hash of the joined string without
+    * materializing it.
     * Single implementation shared by [[shingles]]'s short branch and
     * Decontaminate's word-gram hashing, so the cross-path (and
     * DuckDB-oracle) hash equality has one definition.
@@ -477,7 +461,10 @@ object TextAlgos {
     * (ThreadLocal); `reset` bumps the epoch instead of clearing, so a
     * row pays zero allocation and zero zeroing. Membership semantics
     * are identical: a slot counts only when its stamp equals the
-    * current epoch.
+    * current epoch. The set serves one consumer at a time: `reset`
+    * fails fast while a consumer holds it (a nested caller would
+    * otherwise restart the outer caller's epoch and corrupt its
+    * counts), and every consumer `release`s it in a `finally`.
     */
   private final class ScratchLongSet {
     private var cap = 1 << 10
@@ -486,12 +473,16 @@ object TextAlgos {
     private var stamps = new Array[Int](cap)
     private var epoch = 0
     private var used = 0
+    private var inUse = false
 
     /** Start a new row: O(1) unless the requested capacity outgrows the
       * table (then re-allocate) or the epoch counter wraps (then clear
       * stamps once every ~2^31 rows).
       */
     def reset(expected: Int): Unit = {
+      if (inUse) throw new IllegalStateException(
+        "TextAlgos scratch set reset while in use: nested distinct counting on one thread")
+      inUse = true
       var need = 16
       val target = math.min(math.max(expected, 8) * 2, 1 << 17)
       while (need < target) need <<= 1
@@ -504,6 +495,8 @@ object TextAlgos {
       epoch += 1
       used = 0
     }
+
+    def release(): Unit = inUse = false
 
     def add(k: Long): Boolean = {
       var i = (mix64(k) & mask).toInt
@@ -544,6 +537,16 @@ object TextAlgos {
     override def initialValue(): ScratchLongSet = new ScratchLongSet
   }
 
+  /** Runs `body` while this thread's scratch set is held, the way an
+    * outer distinct-counting consumer holds it — the seam for testing
+    * that a nested consumer fails fast.
+    */
+  private[graft] def holdingScratch[T](body: => T): T = {
+    val s = scratchSet.get()
+    s.reset(1)
+    try body finally s.release()
+  }
+
   /** Per-char lookup tables for the hot per-row loops: fold
     * Character.toLowerCase / isLetterOrDigit / isWhitespace into one
     * array read each. Pure precomputation of the same JDK functions —
@@ -558,10 +561,11 @@ object TextAlgos {
   }
 
   /** All per-turn text metrics in ONE pass over the normalized text:
-    * (symbol density, 64-bit hash, distinct-trigram fraction over
-    * per-char lowercased text). Values identical to calling
-    * symbolDensity / hash64 / distinctNgramFraction(toLowerCase)
-    * separately for ASCII inputs; for exact parity the pipeline AND the
+    * (symbol density, 64-bit hash — FNV-1a over UTF-16 code units,
+    * then mix64 — and distinct-trigram fraction over per-char
+    * lowercased text). Values identical to calling symbolDensity /
+    * distinctNgramFraction(toLowerCase) separately for ASCII inputs;
+    * for exact parity the pipeline AND the
     * oracle both call only this (per-char Character.toLowerCase — the
     * sequential oracle is the semantics definition).
     */
@@ -578,7 +582,7 @@ object TextAlgos {
     var rolling = 0L // last `order` lowercased chars packed 16 bits each
     val mask = (1L << (16 * order)) - 1
     var i = 0
-    while (i < len) {
+    try while (i < len) {
       val c = s.charAt(i)
       sym += classTable(c)
       h ^= c.toLong
@@ -588,7 +592,7 @@ object TextAlgos {
         if (i >= order - 1 && seen.add(rolling)) distinct += 1
       }
       i += 1
-    }
+    } finally if (seen != null) seen.release()
     val symD = if (len == 0) 0.0 else sym.toDouble / len.toDouble
     val rep = if (total < 2) 1.0 else distinct.toDouble / total.toDouble
     (symD, mix64(h), rep)

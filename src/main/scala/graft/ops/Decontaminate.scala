@@ -32,34 +32,33 @@ import graft.functions.TextAlgos
   * text movement, no join. The broadcast is GATED on the counted
   * gram-set size (the dp1 pattern — a hint that bypasses the size
   * check is how broadcasts OOM); an oversized benchmark falls back to
-  * a keys-only shuffle join: corpus rows explode to 16-byte
-  * `(row-key, gram-hash)` pairs (never text), inner-join the gram
-  * set, and count per row key. Both paths hash with the same 64-bit
-  * fingerprint and dedupe grams per document before counting, so they
-  * agree exactly (a divergence needs a 64-bit collision: ~1e-9 at 1e7
-  * grams).
+  * a keys-only shuffle join keyed by CONTENT: each corpus row's key is
+  * `xxhash64(text)` (null text, null key), rows explode to 16-byte
+  * `(key, gram-hash)` pairs (never text), inner-join the gram set, and
+  * the matched pairs — identical texts emit identical pairs, hence a
+  * `distinct` — are counted per key. The report left-joins those
+  * counts back to `(id, key)`, so every row keeps its own row and id
+  * type, and the plan stays a pure function of its inputs: no row
+  * numbering, nothing cached past the call; the corpus is scanned
+  * twice (pairs, report) instead.
+  *
+  * Both paths hash grams with the same 64-bit fingerprint and dedupe
+  * them per document before counting. Against exact string matching
+  * (the DuckDB oracle) both share one floor: a false match needs a
+  * gram-fingerprint collision, per row about g·B/2^64 for g grams
+  * against B bench grams (~5e-11 at g = 10^2, B = 10^7). The fallback
+  * can differ from the broadcast path only by its content key: a
+  * row's count changes only if its text key collides with that of
+  * another distinct text that has matched grams — at most M/2^64 per
+  * row for M such texts (~5e-13 at M = 10^7), below the gram floor.
   */
 object Decontaminate {
 
-  /** One-slot cache handle for the join-fallback path's persisted
-    * frames (bench gram set + rid-pinned corpus projection): they must
-    * stay cached until the CALLER's action runs (the returned frame is
-    * lazy), so each `decontaminate` call releases the previous call's
-    * relations and [[releaseCache]] frees the last one. Process-global
-    * like DocPipeline's flags slot — concurrent `decontaminate` calls
-    * would release each other's caches mid-query (recompute, not
-    * wrong answers); document single-threaded use.
+  /** No-op: [[decontaminate]] caches nothing past its own call, so
+    * there is nothing to release. Kept for callers written against the
+    * former one-slot cache of the join fallback.
     */
-  @transient private var previousCached: Seq[Dataset[_]] = Nil
-  private def swapCached(ds: Seq[Dataset[_]]): Unit = synchronized {
-    previousCached.foreach(_.unpersist(blocking = false))
-    previousCached = ds
-  }
-
-  /** Release the cached relations pinned by the most recent
-    * join-fallback `decontaminate` call.
-    */
-  def releaseCache(): Unit = swapCached(Nil)
+  def releaseCache(): Unit = ()
 
   /** Distinct sorted 64-bit fingerprints of a text's word n-grams —
     * the single tokenization + hashing source for both paths.
@@ -71,10 +70,10 @@ object Decontaminate {
     val lower = text.toLowerCase(java.util.Locale.ROOT)
     val (starts, ends, nTok) = TextAlgos.tokenOffsets(lower)
     if (nTok < n) return Array.emptyLongArray
-    // hash64 of each n-token window joined by single spaces, computed
-    // straight from the token offsets (shared single implementation —
-    // TextAlgos.hashJoinedTokens — so this hash and the shingle hash
-    // can never drift apart)
+    // FNV-1a/mix64 hash of each n-token window joined by single
+    // spaces, computed straight from the token offsets (shared single
+    // implementation — TextAlgos.hashJoinedTokens — so this hash and
+    // the shingle hash can never drift apart)
     val out = new Array[Long](nTok - n + 1)
     var i = 0
     while (i + n <= nTok) {
@@ -152,26 +151,26 @@ object Decontaminate {
                     maxBroadcastGrams: Long = 1L << 26): DataFrame = {
     require(n > 0, s"n must be positive, got $n")
     require(minMatches > 0, s"minMatches must be positive, got $minMatches")
-    require(idCol != "__rid" && textCol != "__rid",
-      "__rid is reserved for the fallback path's internal row key")
+    require(idCol != "__key" && textCol != "__key",
+      "__key is reserved for the fallback path's content key")
     val spark = corpus.sparkSession
     import spark.implicits._
-    // persist across the gate count + the consuming pass (collect or
-    // join build) so the bench set is computed once, not twice
+    // persisted across the gate count and the collect, so the broadcast
+    // path builds the bench set once; released before either path's
+    // plan is built
     val grams = benchGramSet(bench, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // count BEFORE collecting: the gate must trip without materializing
     // an oversized set on the driver
-    val nGrams = grams.count()
+    val benchArr =
+      try if (grams.count() <= maxBroadcastGrams) Some(grams.collect()) else None
+      finally grams.unpersist(blocking = false)
     val idField = corpus.schema(corpus.schema.fieldIndex(idCol))
     val projected = corpus.select(col(idCol), col(textCol).cast("string"))
-    val counted: DataFrame =
-      if (nGrams <= maxBroadcastGrams) {
-        val benchArr = grams.collect()
-        grams.unpersist(blocking = false)
-        swapCached(Nil) // also free any previous fallback call's frames
-        java.util.Arrays.sort(benchArr)
-        val bc = spark.sparkContext.broadcast(benchArr)
+    val counted: DataFrame = benchArr match {
+      case Some(arr) =>
+        java.util.Arrays.sort(arr)
+        val bc = spark.sparkContext.broadcast(arr)
         val outSchema = StructType(Seq(idField,
           StructField("n_matched", LongType, nullable = false)))
         projected.mapPartitions { it =>
@@ -181,36 +180,25 @@ object Decontaminate {
               countMatches(gramHashes(r.getString(1), n), arr).toLong)
           }
         }(Encoders.row(outSchema)).toDF(idField.name, "n_matched")
-      } else {
-        // fallback: 16-byte (row-key, hash) pairs ride the shuffle,
-        // never text. The row key is per-ROW (not idCol) so duplicate
-        // or null ids can't merge counts or drop join rows. The rid
-        // assignment is PINNED by persisting and materializing the
-        // projection before the two subtrees below branch — without
-        // that, each subtree would re-evaluate
-        // monotonically_increasing_id on its own scan, and any
-        // nondeterministic lineage (an upstream shuffle's fetch order,
-        // a stage retry) could attach one row's count to another's id.
-        // The usual cached-relation caveat remains: losing an executor
-        // recomputes its blocks, which is why the cap is a cluster-
-        // standard risk, not a new one. Both this frame and the bench
-        // gram set stay cached until the caller's action runs; the
-        // one-slot handle above releases them on the next call (or via
-        // releaseCache()).
-        val withRid = projected.withColumn("__rid", monotonically_increasing_id())
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        withRid.count()
-        swapCached(Seq(grams, withRid))
-        val pairs = withRid.flatMap { r =>
-          gramHashes(r.getString(1), n).map(h => (r.getLong(2), h))
-        }.toDF("__rid", "h")
+      case None =>
+        // fallback: 16-byte (key, hash) pairs ride the shuffle, never
+        // text. The key is the text's content hash, so rows with equal
+        // text share one count and duplicate or null ids never merge
+        // counts or drop rows
+        val text = col(textCol)
+        val keyed = projected.withColumn("__key", when(text.isNotNull, xxhash64(text)))
+        val pairs = keyed.where(text.isNotNull).select(col("__key"), text)
+          .as[(Long, String)]
+          .flatMap { case (k, t) => gramHashes(t, n).map(h => (k, h)) }
+          .toDF("__key", "h")
         val matched = pairs.join(grams.toDF("h"), Seq("h"))
-          .groupBy(col("__rid")).agg(count(lit(1)).as("n_matched"))
-        withRid.select(col("__rid"), col(idField.name))
-          .join(matched, Seq("__rid"), "left")
+          .distinct()
+          .groupBy(col("__key")).agg(count(lit(1)).as("n_matched"))
+        keyed.select(col(idField.name), col("__key"))
+          .join(matched, Seq("__key"), "left")
           .select(col(idField.name),
             coalesce(col("n_matched"), lit(0L)).as("n_matched"))
-      }
+    }
     counted.select(col(idField.name), col("n_matched"),
       (col("n_matched") >= minMatches).as("contaminated"))
   }

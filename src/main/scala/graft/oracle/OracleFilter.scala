@@ -47,7 +47,7 @@ object OracleFilter {
       if (votes.isEmpty) "und"
       else votes.toSeq.sortBy { case (l, n) => (-n, l) }.head._1
 
-    // duplicate ranks: occurrence index per hash64(norm_text) within
+    // duplicate ranks: occurrence index per 64-bit norm_text hash within
     // the conv (turn order = turn_idx order, which `conv` already is).
     // The pipeline groups by the same 64-bit hash (slim window rows),
     // so parity holds exactly — even under a hash collision.

@@ -99,125 +99,103 @@ object CheckpointedRun {
     if (todo.isEmpty && prior.isDefined)
       return RunResult(table.currentVersion, Seq.empty, done.toSeq.sorted)
 
-    // opt-in IQR perplexity bounds (the A8 outlier rule on the model
-    // score): quartiles are a whole-corpus statistic, so the bounds are
-    // computed ONCE over the FULL input — naive per-bucket quartiles
-    // would give each bucket different drop thresholds, breaking the
-    // bucketed == direct invariant. Scoring is the engine's dominant
-    // map cost, so the scored frame is PERSISTED and reused: the
-    // quartile passes read it, and every bucket labels from it instead
-    // of re-scoring its rows. Deterministic (exact histogram-selection
-    // percentiles), so a resume recomputes the identical bounds and the
-    // recorded copy fails the guard if it somehow doesn't (changed
-    // corpus).
-    val scoredForIqr: Option[Dataset[graft.schema.ScoredTurn]] = pplIqrK.map { _ =>
-      QualityFilter.score(input)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // every relation this run caches goes through `persisted` and is
+    // released by the one `finally` below — on return and on a throw
+    // (a failed bucket, an interrupted run) alike
+    val cached = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    def persisted[T](ds: Dataset[T]): Dataset[T] = {
+      cached += ds
+      ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    val pplBounds = for (k <- pplIqrK; s <- scoredForIqr)
-      yield QualityFilter.pplIqrBounds(s, k)
-    val recorded = settings.copy(pplBounds = pplBounds)
-    guard(recorded)
-    recorded.write(outRoot)
+    try {
+      // opt-in IQR perplexity bounds (the A8 outlier rule on the model
+      // score): quartiles are a whole-corpus statistic, so the bounds
+      // are computed ONCE over the FULL input — naive per-bucket
+      // quartiles would give each bucket different drop thresholds,
+      // breaking the bucketed == direct invariant. Scoring is the
+      // engine's dominant map cost, so the scored frame is PERSISTED
+      // and reused: the quartile passes read it, and every bucket labels
+      // from it instead of re-scoring its rows. Deterministic (exact
+      // histogram-selection percentiles), so a resume recomputes the
+      // identical bounds and the recorded copy fails the guard if it
+      // somehow doesn't (changed corpus).
+      val scoredForIqr = pplIqrK.map(_ => persisted(QualityFilter.score(input)))
+      val pplBounds = for (k <- pplIqrK; s <- scoredForIqr)
+        yield QualityFilter.pplIqrBounds(s, k)
+      val recorded = settings.copy(pplBounds = pplBounds)
+      guard(recorded)
+      recorded.write(outRoot)
 
-    // ONE census over the corpus locates giant conversations for every
-    // to-do bucket (a census per bucket would be nBuckets extra
-    // full-input jobs); buckets with no giants run the standard path
-    // with zero split overhead. None = the census overflowed: every
-    // bucket then matches giants with an IN-subquery instead of an
-    // inlined list.
-    val giants: Option[Map[Int, Array[String]]] =
-      if (skewMaxTurns <= 0 || todo.isEmpty) Some(Map.empty)
-      else SkewSplit.giantCensus(input, skewMaxTurns, maxCollectedGiants, bucket)
+      // ONE census over the corpus locates giant conversations for every
+      // to-do bucket (a census per bucket would be nBuckets extra
+      // full-input jobs); buckets with no giants run the standard path
+      // with zero split overhead. None = the census overflowed: every
+      // bucket then matches giants with an IN-subquery instead of an
+      // inlined list.
+      val giants: Option[Map[Int, Array[String]]] =
+        if (skewMaxTurns <= 0 || todo.isEmpty) Some(Map.empty)
+        else SkewSplit.giantCensus(input, skewMaxTurns, maxCollectedGiants, bucket)
 
-    // opt-in conversation near-dup: near-dup PAIRS cross conv-hash
-    // buckets, so the dropped-conversation set is computed ONCE over
-    // the FULL corpus (deterministic LSH — a resumed run recomputes the
-    // identical set, keeping re-run buckets bit-identical) and joined
-    // into each bucket's labels. Persisted: every to-do bucket reuses
-    // the one candidate-generation pass. The cd2 capped-bucket
-    // truncation observation is harvested off the SAME materializing
-    // action and lands in the metrics root as data (north rule:
-    // recall-affecting truncation must be queryable, not buried in
-    // logs).
-    val dropped = convNearDup.filter(_ => todo.nonEmpty).map { cfg =>
-      val d = QualityFilter.convNearDupDropIds(input.toDF(), cfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      metricsRoot match {
-        case Some(mr) =>
-          val trunc = Metrics.truncationMetrics(d, Seq("cd2"))
-          SnapshotTable(s"$mr/truncation", 1).commitBucket(trunc, 0)
-        case None => d.count() // materialize the cache in one pass
-      }
-      d
-    }
+      // The opt-in flag rules' key sets, each computed ONCE over the
+      // FULL corpus, persisted, and joined into every to-do bucket.
+      // Boilerplate (which normalized texts recur across >= minConvs
+      // conversations) and conv near-dup (pairs) cross conv-hash
+      // buckets; decontamination is per-turn but builds, counts and
+      // broadcast-gates the benchmark gram set once instead of per
+      // bucket. All three are deterministic (the LSH too), so a resumed
+      // run recomputes identical sets and re-run buckets stay
+      // bit-identical. The list order is the lineage order: turn-level
+      // boilerplate then decontamination before conversation-level near
+      // dup — finer-grained reasons first.
+      val flagRules: Seq[DataFrame => DataFrame] = if (todo.isEmpty) Nil else Seq(
+        // the model-free raw census (normalize + hash only; the
+        // per-bucket labeling already pays the model pass)
+        boilerplate.map { cfg =>
+          val d = persisted(QualityFilter.boilerplateDropKeysRaw(input, cfg))
+          d.count() // materialize the cache in one pass
+          QualityFilter.withBoilerplate(_: DataFrame, d)
+        },
+        decontaminate.map { cfg =>
+          val bench = input.sparkSession.read.parquet(cfg.benchPath)
+          val d = persisted(QualityFilter.contaminatedTurnKeys(input.toDF(), bench, cfg))
+          d.count() // materialize the cache in one pass
+          QualityFilter.withContaminated(_: DataFrame, d)
+        },
+        // the cd2 capped-bucket truncation observation is harvested off
+        // the SAME materializing action and lands in the metrics root as
+        // data (north rule: recall-affecting truncation must be
+        // queryable, not buried in logs)
+        convNearDup.map { cfg =>
+          val d = persisted(QualityFilter.convNearDupDropIds(input.toDF(), cfg))
+          metricsRoot match {
+            case Some(mr) =>
+              val trunc = Metrics.truncationMetrics(d, Seq("cd2"))
+              SnapshotTable(s"$mr/truncation", 1).commitBucket(trunc, 0)
+            case None => d.count() // materialize the cache in one pass
+          }
+          QualityFilter.withConvNearDup(_: DataFrame, d)
+        }).flatten
 
-    // opt-in boilerplate: the census (which normalized texts recur
-    // across >= minConvs conversations) also crosses conv-hash buckets,
-    // so the dropped-turn key set is computed ONCE over the FULL corpus
-    // — via the model-free raw path (normalize + hash only; the
-    // per-bucket labeling already pays the model pass) — persisted, and
-    // joined into each bucket. Deterministic, so a resumed run
-    // recomputes the identical set.
-    val bpDropped = boilerplate.filter(_ => todo.nonEmpty).map { cfg =>
-      val d = QualityFilter.boilerplateDropKeysRaw(input, cfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      d.count() // materialize the cache in one pass
-      d
-    }
-
-    // opt-in decontamination: per-turn (no cross-bucket coupling), but
-    // still computed ONCE corpus-wide so the benchmark gram set is
-    // built, counted, and broadcast-gated a single time instead of per
-    // bucket. Deterministic — a resume recomputes the identical keys.
-    val ctDropped = decontaminate.filter(_ => todo.nonEmpty).map { cfg =>
-      val bench = input.sparkSession.read.parquet(cfg.benchPath)
-      val d = QualityFilter.contaminatedTurnKeys(input.toDF(), bench, cfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      d.count() // materialize before any later call releases the
-                // fallback path's one-slot upstream cache
-      d
-    }
-
-    // with IQR on, every bucket labels from the persisted scored frame;
-    // otherwise the bucket filter and routing push below the scoring
-    // projection, so each bucket scores only its own rows
-    val scored = scoredForIqr.getOrElse(QualityFilter.score(input))
-    todo.foreach { b =>
-      val base = SkewSplit.route(scored.where(bucket === b), skewMaxTurns,
-        giants.map(_.getOrElse(b, Array.empty[String])), pplBounds)
-      // composition order = lineage order: boilerplate then
-      // decontamination (turn-level) before conv-near-dup
-      // (conversation-level) — finer-grained reasons first
-      val withBp = bpDropped match {
-        case Some(d) => QualityFilter.withBoilerplate(base, d)
-        case None => base
+      // with IQR on, every bucket labels from the persisted scored frame;
+      // otherwise the bucket filter and routing push below the scoring
+      // projection, so each bucket scores only its own rows
+      val scored = scoredForIqr.getOrElse(QualityFilter.score(input))
+      todo.foreach { b =>
+        val base = SkewSplit.route(scored.where(bucket === b), skewMaxTurns,
+          giants.map(_.getOrElse(b, Array.empty[String])), pplBounds)
+        table.commitBucket(flagRules.foldLeft(base)((df, flag) => flag(df)), b)
+        afterDataCommit(b)
+        metricTables.foreach { case (statsT, lineageT) =>
+          // metrics read the bucket's COMMITTED parquet back instead of
+          // re-running the pipeline per metrics table (2 extra pipeline
+          // executions per bucket in round 1), and are thereby derived
+          // from exactly the bytes the data snapshot serves
+          val committed = input.sparkSession.read.parquet(s"$outRoot/data/bucket=$b")
+          statsT.commitBucket(Metrics.bucketStats(committed, nBuckets), b)
+          lineageT.commitBucket(Metrics.ruleLineage(committed, nBuckets), b)
+        }
       }
-      val withCt = ctDropped match {
-        case Some(d) => QualityFilter.withContaminated(withBp, d)
-        case None => withBp
-      }
-      val labeled = dropped match {
-        case Some(d) => QualityFilter.withConvNearDup(withCt, d)
-        case None => withCt
-      }
-      table.commitBucket(labeled, b)
-      afterDataCommit(b)
-      metricTables.foreach { case (statsT, lineageT) =>
-        // metrics read the bucket's COMMITTED parquet back instead of
-        // re-running the pipeline per metrics table (2 extra pipeline
-        // executions per bucket in round 1), and are thereby derived
-        // from exactly the bytes the data snapshot serves
-        val committed = input.sparkSession.read.parquet(s"$outRoot/data/bucket=$b")
-        statsT.commitBucket(Metrics.bucketStats(committed, nBuckets), b)
-        lineageT.commitBucket(Metrics.ruleLineage(committed, nBuckets), b)
-      }
-    }
-    dropped.foreach(_.unpersist(blocking = false))
-    bpDropped.foreach(_.unpersist(blocking = false))
-    ctDropped.foreach(_.unpersist(blocking = false))
-    scoredForIqr.foreach(_.unpersist(blocking = false))
-    graft.ops.Decontaminate.releaseCache()
+    } finally cached.foreach(_.unpersist(blocking = false))
     RunResult(table.currentVersion, todo, done.toSeq.sorted)
   }
 

@@ -8,7 +8,6 @@ import graft.functions.TextAlgos
 import graft.lang.LangId
 import graft.rules.RuleConfig._
 import graft.schema.{ScoredTurn, Turn}
-import graft.scrub.Scrub
 
 /** The quality-filter pipeline (north rule): typed Dataset in, labeled +
   * scrubbed DataFrame out.
@@ -79,9 +78,28 @@ object QualityFilter {
   /** Eligibility for model-based rules + the conversation language
     * vote: non-empty, long enough to carry signal, not a tool payload.
     */
-  private def eligible: Column =
+  private[pipeline] def eligible: Column =
     !col("is_empty") && col("norm_len") >= PplMinChars &&
       !(col("role") <=> lit("tool"))
+
+  /** Conversation language vote, shared by the windowed path below and
+    * the giant-conversation path ([[SkewSplit]]): `langVote(l)` counts
+    * a conversation's eligible turns in language `l` (aggregated per
+    * conversation by the caller and named `cnt_<l>`), and `convLang`
+    * picks the deterministic mode from those counts (count desc, lang
+    * asc; "und" when no turn is eligible). The classifier's language
+    * set is FIXED and small, so the mode is a handful of conditional
+    * sums.
+    */
+  private[pipeline] def langVote(l: String): Column =
+    sum(when(eligible && col("lang") === l, 1).otherwise(0))
+
+  private[pipeline] def convLang: Column = {
+    val langs = LangId.default.langs.toSeq
+    val maxCnt = greatest(langs.map(l => col(s"cnt_$l")): _*)
+    when(maxCnt > 0, coalesce(langs.map(l => when(col(s"cnt_$l") === maxCnt, lit(l))): _*))
+      .otherwise(lit("und"))
+  }
 
   def label(ds: Dataset[Turn]): DataFrame = labelScored(score(ds))
 
@@ -119,24 +137,16 @@ object QualityFilter {
     val wConvFull = Window.partitionBy($"conv_id").orderBy($"turn_idx")
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
-    // Conversation language vote: the classifier's language set is
-    // FIXED and small, so the deterministic mode (count desc, lang asc)
-    // is a handful of conditional sums over the conversation frame —
-    // sharing wSeq's (conv, turn) sort AND its Window operator. Total
-    // intra-partition sorts in the whole pipeline: 2
-    // ((conv,norm_hash,turn) then (conv,turn)); total Window operators:
-    // 2 (pinned by PipelinePlanSpec).
+    // Conversation language vote: sharing wSeq's (conv, turn) sort AND
+    // its Window operator. Total intra-partition sorts in the whole
+    // pipeline: 2 ((conv,norm_hash,turn) then (conv,turn)); total
+    // Window operators: 2 (pinned by PipelinePlanSpec).
     // Each sum is projected ONCE as a named column and the vote is
     // derived downstream from the attributes: WindowExec does not CSE,
     // so inlining the sums into greatest/coalesce (the round-1 shape)
     // materialized 24 aggregate buffers for 4 distinct sums.
-    val langs = LangId.default.langs // sorted; eligible rows only carry these
-    val voteSums = langs.toSeq.map(l =>
-      sum(when(eligible && $"lang" === l, 1).otherwise(0)).over(wConvFull).as(s"cnt_$l"))
-    val maxCnt = greatest(langs.toSeq.map(l => col(s"cnt_$l")): _*)
-    val convLang = when(maxCnt > 0, coalesce(
-      langs.toSeq.map(l => when(col(s"cnt_$l") === maxCnt, lit(l))): _*))
-      .otherwise(lit("und"))
+    val voteSums = LangId.default.langs.toSeq.map(l =>
+      langVote(l).over(wConvFull).as(s"cnt_$l"))
 
     // ONE select holding every window expression: the analyzer groups
     // window functions by (partition, order) spec — the sequence
@@ -268,12 +278,13 @@ object QualityFilter {
     boilerplateKeysFromMetrics(scored.toDF(), cfg)
 
   /** The same drop keys from RAW turns, skipping model inference: the
-    * census needs only the normalization metrics, and normalize + hash
-    * here are the exact code path `score` uses (Scrub.normalizeWsPlain;
-    * TextAlgos.hash64 == the turnMetrics FNV/mix), so the keys equal
-    * `boilerplateDropKeys(score(ds))` (pinned by RulesSpec). This is
-    * the bucketed runner's entry point — a full scoring pass over the
-    * corpus just to census hashes would double its model cost.
+    * census needs only the normalization metrics, and those come from
+    * the calls `score` makes — GraftExpressions.normalized for
+    * norm_len/is_empty, the TextAlgos.turnMetrics hash for norm_hash —
+    * so the keys equal `boilerplateDropKeys(score(ds))` (pinned by
+    * RulesSpec). This is the bucketed runner's entry point — a full
+    * scoring pass over the corpus just to census hashes would double
+    * its model cost.
     */
   def boilerplateDropKeysRaw(turns: Dataset[Turn],
                              cfg: BoilerplateConfig = BoilerplateConfig()): DataFrame = {
@@ -281,10 +292,9 @@ object QualityFilter {
     import spark.implicits._
     val keyed = turns.mapPartitions { it =>
       it.map { t =>
-        val norm = Scrub.normalizeWsPlain(t.text)
-        val isEmpty = t.text == null || Sentinels.contains(norm)
-        (t.conv_id, t.turn_idx, t.role, TextAlgos.hash64(norm),
-          if (norm == null) 0 else norm.length, isEmpty)
+        val (norm, normLen, isEmpty) = graft.functions.GraftExpressions.normalized(t.text)
+        (t.conv_id, t.turn_idx, t.role,
+          TextAlgos.turnMetrics(norm, RepetitionOrder)._2, normLen, isEmpty)
       }
     }.toDF("conv_id", "turn_idx", "role", "norm_hash", "norm_len", "is_empty")
     boilerplateKeysFromMetrics(keyed, cfg)

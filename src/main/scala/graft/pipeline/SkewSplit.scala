@@ -114,9 +114,6 @@ object SkewSplit {
       .unionByName(labelGiant(scored.where(isGiant), maxTurns, pplBounds))
   }
 
-  private def eligible = !col("is_empty") &&
-    col("norm_len") >= PplMinChars && !(col("role") <=> lit("tool"))
-
   /** Bucketed-window labeling for giant conversations. Semantics are
     * identical to QualityFilter.labelScored; only the physical window
     * partitioning differs.
@@ -166,15 +163,10 @@ object SkewSplit {
 
     // language vote: two-phase aggregation (map-side combine soaks the
     // skew) + broadcast join back (few giant conversations)
-    val langs = LangId.default.langs
-    val voteAggs = langs.toSeq.map(l =>
-      sum(when(eligible && $"lang" === l, 1).otherwise(0)).as(s"cnt_$l"))
+    val voteAggs = LangId.default.langs.toSeq.map(l =>
+      QualityFilter.langVote(l).as(s"cnt_$l"))
     val votes = bucketed.groupBy($"conv_id").agg(voteAggs.head, voteAggs.tail: _*)
-    val maxCnt = greatest(langs.toSeq.map(l => col(s"cnt_$l")): _*)
-    val voteTable = votes.select($"conv_id",
-      when(maxCnt > 0, coalesce(langs.toSeq.map(l =>
-        when(col(s"cnt_$l") === maxCnt, lit(l))): _*))
-        .otherwise(lit("und")).as("conv_lang"))
+    val voteTable = votes.select($"conv_id", QualityFilter.convLang.as("conv_lang"))
 
     val withVote = withPrev.join(broadcast(voteTable), Seq("conv_id"))
 
@@ -213,10 +205,10 @@ object SkewSplit {
       RuleTsRegress -> (!col("is_first") && col("ts").isNotNull &&
         col("prev_ts").isNotNull && col("ts") < col("prev_ts")),
       RuleDuplicate -> (!empty && col("dup_rank") > 1),
-      RuleLang -> (eligible && !col("lang").isin(AllowedLangs.toSeq: _*) &&
+      RuleLang -> (QualityFilter.eligible && !col("lang").isin(AllowedLangs.toSeq: _*) &&
         (col("lang_conf") >= LangDropConf ||
           !col("conv_lang").isin(AllowedLangs.toSeq: _*))),
-      RulePpl -> (eligible && pplViolation)
+      RulePpl -> (QualityFilter.eligible && pplViolation)
     )
     require(preds.map(_._1) == RuleOrder, "rule order drift vs RuleConfig")
 

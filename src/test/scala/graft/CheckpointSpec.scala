@@ -312,7 +312,6 @@ class CheckpointSpec extends AnyFunSuite {
         spark.read.parquet(benchDir), cfg.copy(maxBroadcastGrams = 0L))
       .collect().map(r => (r.getString(0), r.getInt(1))).toSet
     assert(viaFallback == planted, s"fallback keys: $viaFallback")
-    graft.ops.Decontaminate.releaseCache()
 
     val root1 = Files.createTempDirectory("graft_ct1").toString
     val res1 = CheckpointedRun.run(ds, root1, 4, decontaminate = Some(cfg))
@@ -588,9 +587,13 @@ class CheckpointSpec extends AnyFunSuite {
       CheckpointedRun.run(in, root, 4, convNearDup = Some(nd), boilerplate = Some(bp),
         pplIqrK = Some(k), decontaminate = Some(ct), afterDataCommit = after)
 
-    // crash right after bucket 0's data commit
+    // crash right after bucket 0's data commit: the run still releases
+    // every relation it persisted (scored frame + three key sets)
     final class Crash extends RuntimeException("simulated crash")
+    def persistedRdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val persistedBefore = persistedRdds
     intercept[Crash] { run(ds, after = b => if (b == 0) throw new Crash) }
+    assert(persistedRdds == persistedBefore, "a failed run left relations persisted")
     assert(graft.io.SnapshotTable(root, 4).completedBuckets == Set(0))
     val bounds = QualityFilter.pplIqrBounds(QualityFilter.score(ds), 1.5)
     val (nGrams, xorSig) = graft.ops.Decontaminate.benchFingerprint(
@@ -627,6 +630,7 @@ class CheckpointSpec extends AnyFunSuite {
 
     val res = run(ds)
     assert(res.bucketsComputed == Seq(1, 2, 3) && res.bucketsSkipped == Seq(0))
+    assert(persistedRdds == persistedBefore, "a completed run left relations persisted")
     val direct = labeled(QualityFilter.withConvNearDup(
       QualityFilter.withContaminated(
         QualityFilter.withBoilerplate(

@@ -94,6 +94,54 @@ class DecontaminateSpec extends AnyFunSuite {
     assert(byGate.head == byGate.last, "paths diverge on dup/null ids")
   }
 
+  test("equal texts, repeated rows and null text keep single-document counts on both paths") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // the fallback keys rows by text content: identical texts under
+    // different ids, a repeated (id, text) row and null text must each
+    // report exactly what the document alone would
+    val rows = Seq[(java.lang.Long, String)](
+      (1L, "a b c x"), (2L, "a b c x"),          // same text, two ids
+      (3L, "x a b c d"), (3L, "x a b c d"),      // repeated (id, text) row
+      (4L, null), (null, null),                  // null text (and id)
+      (5L, "b c d a b c"), (6L, "z z z"))
+    val bench = Seq[(java.lang.Long, String)]((9L, "a b c d")).toDF("doc_id", "text")
+    def single(text: String): Long = Decontaminate.decontaminate(
+        Seq[(java.lang.Long, String)]((0L, text)).toDF("doc_id", "text"), bench,
+        "text", "doc_id", n = 3, minMatches = 1)
+      .head().getLong(1)
+    val expected = rows.map { case (id, t) => (Option(id).map(_.toLong), single(t)) }
+      .sortBy(r => (r._1.getOrElse(-1L), r._2))
+    assert(expected.map(_._2) == Seq(0L, 1L, 1L, 2L, 2L, 0L, 2L, 0L))
+    for (gate <- Seq(0L, 1L << 20)) {
+      val got = Decontaminate.decontaminate(rows.toDF("doc_id", "text"), bench,
+          "text", "doc_id", n = 3, minMatches = 1, maxBroadcastGrams = gate)
+        .collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1)))
+        .sortBy(r => (r._1.getOrElse(-1L), r._2)).toSeq
+      assert(got == expected, s"gate=$gate")
+    }
+  }
+
+  test("join fallback: no cached relation or row numbering; no persist outlives the call") {
+    import org.apache.spark.sql.catalyst.expressions.MonotonicallyIncreasingID
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val sc = TestSpark.spark.sparkContext
+    for (gate <- Seq(0L, 1L << 20)) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val df = Decontaminate.decontaminate(docsDf(corpus), docsDf(bench), "text", "doc_id",
+        n = 3, minMatches = 1, maxBroadcastGrams = gate)
+      assert(df.collect().length == corpus.length)
+      assert(sc.getPersistentRDDs.keySet.toSet == before, s"gate=$gate: a persist outlived the call")
+      val plan = df.queryExecution.executedPlan
+      val helper = new AdaptiveSparkPlanHelper {}
+      assert(helper.find(plan)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty &&
+        !plan.toString.contains("InMemoryRelation"), s"gate=$gate:\n$plan")
+      assert(helper.find(plan)(_.expressions.exists(
+        _.exists(_.isInstanceOf[MonotonicallyIncreasingID]))).isEmpty, s"gate=$gate:\n$plan")
+    }
+  }
+
   test("gramHashes: dedup, ordering-insensitive hashing, short inputs") {
     val h = Decontaminate.gramHashes("A  b\tC", 3)
     assert(h.length == 1) // case-folded, whitespace-run split

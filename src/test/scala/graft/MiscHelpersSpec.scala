@@ -24,4 +24,18 @@ class MiscHelpersSpec extends AnyFunSuite {
     assert(!TextAlgos.isBase64(""))
     assert(!TextAlgos.isBase64(null))
   }
+
+  test("scratch set: a nested distinct-counting consumer fails fast") {
+    // both per-row consumers of the thread's scratch set throw instead
+    // of restarting an outer consumer's epoch mid-row
+    val text = "abcabcabd some longer text"
+    val expected = (TextAlgos.turnMetrics(text, 3), TextAlgos.distinctNgramFraction(text, 3))
+    intercept[IllegalStateException](TextAlgos.holdingScratch(TextAlgos.turnMetrics(text, 3)))
+    intercept[IllegalStateException](
+      TextAlgos.holdingScratch(TextAlgos.distinctNgramFraction(text, 3)))
+    // fewer than 2 grams never touches the set, so nesting it is fine
+    assert(TextAlgos.holdingScratch(TextAlgos.turnMetrics("ab", 3)) == TextAlgos.turnMetrics("ab", 3))
+    // released on every exit: sequential use after the failures works
+    assert((TextAlgos.turnMetrics(text, 3), TextAlgos.distinctNgramFraction(text, 3)) == expected)
+  }
 }
