@@ -1,6 +1,9 @@
 package graft.metrics
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CollectMetrics}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnShim
@@ -9,51 +12,110 @@ import graft.rules.RuleConfig
 
 /** Per-partition lineage + counters (north rule): kept/dropped/scrubbed
   * per rule per conversation-bucket, written to a metrics table next to
-  * the output snapshot, plus job-level counters via the Observation API.
-  *
-  * Counters derive from aggregations (deterministic under task retries)
-  * — NOT from accumulators, which double-count on retry
-  * (SURVEY.md §7.5 #4). The bucket key is pmod(xxhash64(conv_id), B):
+  * the output snapshot. The bucket key is pmod(xxhash64(conv_id), B):
   * stable across runs, independent of physical partitioning.
+  *
+  * A bucket's counters are defined ONCE ([[counters]]); `bucket_stats`
+  * and `rule_lineage` are both projections of that one list, whether it
+  * is aggregated per bucket by a `groupBy` or counted by an
+  * `Observation` while the bucket's rows are written.
+  *
+  * Observed counters are exact under task retries. Observations are
+  * accumulators, and Spark applies a task's accumulator updates only
+  * when the task succeeds (a failed attempt reports only
+  * `countFailedValues` accumulators, which these are not); for a RESULT
+  * task it applies them once per partition, even when a speculative or
+  * retried attempt also succeeds. A shuffle-map stage offers no such
+  * guarantee: a map stage re-run after a fetch failure applies its
+  * updates again (SURVEY.md §7.5 #4). So the observe node must sit at
+  * the top of the frame an action writes, which puts it in that
+  * action's result stage.
   */
 object Metrics {
 
   /** Conversation bucket: the lineage (and checkpoint) unit. */
   def bucketCol(nBuckets: Int) = pmod(xxhash64(col("conv_id")), lit(nBuckets))
 
-  /** Attach job-level counters to a labeled DataFrame; read
-    * `obs.get` after the first action on the returned frame.
+  /** The one definition of a bucket's counters: the `bucket_stats`
+    * columns, then one drop count per lineage rule, named by the rule.
+    * A rule counts every occurrence in `drop_reasons` (the multiplicity
+    * an `explode` would give) and is never null (zero rows count 0);
+    * `array_remove` keeps the count in generated code, where a lambda
+    * `filter` would be interpreted.
     */
-  def observed(labeled: DataFrame, obs: Observation): DataFrame =
-    labeled.observe(obs,
+  private def counters: Seq[Column] = {
+    val reasons = col("drop_reasons")
+    Seq(
       count(lit(1)).as("n_turns"),
       sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-      sum(when(!col("keep"), 1L).otherwise(0L)).as("n_dropped"),
-      sum(aggregate(map_values(col("scrub_counts")), lit(0),
-        (acc, v) => acc + v)).as("n_scrubbed_spans"))
+      sum(when(!col("keep"), 1L).otherwise(0L)).as("n_dropped")) ++
+      RuleConfig.ScrubChain.map { case (rule, _, _) =>
+        sum(coalesce(element_at(col("scrub_counts"), rule), lit(0)))
+          .cast("long").as(s"n_scrub_$rule")
+      } ++
+      RuleConfig.LineageOrder.map(rule =>
+        coalesce(sum(size(reasons) - size(array_remove(reasons, rule))).cast("long"), lit(0L))
+          .as(rule))
+  }
 
-  /** Per-bucket per-rule drop counts: one row per (bucket, rule).
-    * Shuffles only (bucket, reason) pairs after map-side partial agg.
-    */
+  private def countedBy(labeled: DataFrame, nBuckets: Int): DataFrame =
+    labeled.groupBy(bucketCol(nBuckets).as("bucket")).agg(counters.head, counters.tail: _*)
+
+  private def statsOf(counted: DataFrame): DataFrame =
+    counted.drop(RuleConfig.LineageOrder: _*)
+
+  /** One row per (bucket, rule) with a drop count above 0. */
+  private def lineageOf(counted: DataFrame): DataFrame =
+    counted.unpivot(Array(col("bucket")), RuleConfig.LineageOrder.map(col).toArray,
+        "rule", "n_dropped")
+      .where(col("n_dropped") > 0)
+
+  /** Per-bucket per-rule drop counts: one row per (bucket, rule). */
   def ruleLineage(labeled: DataFrame, nBuckets: Int): DataFrame =
-    labeled
-      .select(bucketCol(nBuckets).as("bucket"),
-        explode(col("drop_reasons")).as("rule"))
-      .groupBy(col("bucket"), col("rule"))
-      .agg(count(lit(1)).as("n_dropped"))
+    lineageOf(countedBy(labeled, nBuckets))
 
   /** Per-bucket roll-up: turns / kept / dropped / scrub spans per rule. */
-  def bucketStats(labeled: DataFrame, nBuckets: Int): DataFrame = {
-    val scrubSums = RuleConfig.ScrubChain.map { case (rule, _, _) =>
-      sum(coalesce(element_at(col("scrub_counts"), rule), lit(0)))
-        .cast("long").as(s"n_scrub_$rule")
-    }
-    val aggs = Seq(
-      sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-      sum(when(!col("keep"), 1L).otherwise(0L)).as("n_dropped")) ++ scrubSums
-    labeled
-      .groupBy(bucketCol(nBuckets).as("bucket"))
-      .agg(count(lit(1)).as("n_turns"), aggs: _*)
+  def bucketStats(labeled: DataFrame, nBuckets: Int): DataFrame =
+    statsOf(countedBy(labeled, nBuckets))
+
+  /** `labeled` with the bucket counters attached as observation `obs`.
+    * Write the returned frame itself: the observe node is its top
+    * operator, so it runs in the write's result stage.
+    */
+  def observeCounters(labeled: DataFrame, obs: Observation): DataFrame =
+    labeled.observe(obs, counters.head, counters.tail: _*)
+
+  /** How long an action's observation may take to arrive after the
+    * action returned (the listener bus delivers it); past this the
+    * counters are missing and the call fails instead of waiting forever.
+    */
+  private val ObservationWait = 120.seconds
+
+  /** `(bucket_stats, rule_lineage)` of bucket `bucket`, built on the
+    * driver from the counters `obs` observed over `observed` (a frame of
+    * [[observeCounters]]) during the action that wrote its
+    * `writtenRows` rows — the same rows and schema [[bucketStats]] and
+    * [[ruleLineage]] give over those rows. An empty bucket gives zero
+    * rows in both tables.
+    *
+    * An optimizer can prune an observe node over an empty subtree out
+    * of the executed plan (see [[truncationMetrics]]); Spark then
+    * completes the observation with no fields. That reads as zero
+    * turns, which `writtenRows` must confirm: any disagreement between
+    * the counters and the rows written fails.
+    */
+  def observedTables(observed: DataFrame, obs: Observation, bucket: Int,
+                     writtenRows: Long): (DataFrame, DataFrame) = {
+    val spark = observed.sparkSession
+    val row = Await.result(obs.future, ObservationWait)
+    val nTurns = if (row.length == 0) 0L else row.getLong(0) // n_turns
+    require(nTurns == writtenRows,
+      s"bucket $bucket: the observation counted $nTurns turns but $writtenRows were written")
+    // the groupBy over zero rows: no rows, and the exact counted schema
+    val none = countedBy(spark.createDataFrame(java.util.List.of[Row](), observed.schema), 1)
+    val counted = if (nTurns == 0) none else spark.createDataFrame(
+      java.util.List.of(Row.fromSeq(bucket.toLong +: row.toSeq)), none.schema)
+    (statsOf(counted).coalesce(1), lineageOf(counted).coalesce(1))
   }
 
   /** Surface the LSH bucket-cap observations (capped_buckets /

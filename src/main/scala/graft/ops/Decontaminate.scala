@@ -39,8 +39,8 @@ import graft.functions.TextAlgos
   * `distinct` — are counted per key. The report left-joins those
   * counts back to `(id, key)`, so every row keeps its own row and id
   * type, and the plan stays a pure function of its inputs: no row
-  * numbering, nothing cached past the call; the corpus is scanned
-  * twice (pairs, report) instead.
+  * numbering, nothing cached; the corpus is scanned twice (pairs,
+  * report) instead.
   *
   * Both paths hash grams with the same 64-bit fingerprint and dedupe
   * them per document before counting. Against exact string matching
@@ -155,16 +155,16 @@ object Decontaminate {
       "__key is reserved for the fallback path's content key")
     val spark = corpus.sparkSession
     import spark.implicits._
-    // persisted across the gate count and the collect, so the broadcast
-    // path builds the bench set once; released before either path's
-    // plan is built
+    // NOT persisted: the bench set is small, so counting and collecting
+    // each rebuild it cheaply with an AQE-coalesced shuffle, where a
+    // persisted copy keeps every one of `spark.sql.shuffle.partitions`
+    // partitions (cached plans keep their output partitioning) and pays
+    // ~200 reduce tasks per pass
     val grams = benchGramSet(bench, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // count BEFORE collecting: the gate must trip without materializing
     // an oversized set on the driver
     val benchArr =
-      try if (grams.count() <= maxBroadcastGrams) Some(grams.collect()) else None
-      finally grams.unpersist(blocking = false)
+      if (grams.count() <= maxBroadcastGrams) Some(grams.collect()) else None
     val idField = corpus.schema(corpus.schema.fieldIndex(idCol))
     val projected = corpus.select(col(idCol), col(textCol).cast("string"))
     val counted: DataFrame = benchArr match {

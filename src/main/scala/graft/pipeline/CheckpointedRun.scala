@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.SnapshotTable
@@ -22,8 +22,16 @@ import graft.schema.Turn
   * exchange with no fixed partition count, so AQE sizes its reduce side
   * to the bucket — a handful of reduce tasks and parquet files per
   * bucket, not `spark.sql.shuffle.partitions` of each (200 by default:
-  * 51,200 files at `--buckets 256`). The commit's footer scan and the
-  * metrics read-back below touch only those files.
+  * 51,200 files at `--buckets 256`). The commit's footer scan touches
+  * only those files.
+  *
+  * Metrics (`metricsRoot`): a bucket's counters are counted by an
+  * `Observation` on the frame its data commit writes, not read back
+  * from the committed files, so a bucket runs the label-and-write job's
+  * two Spark jobs plus one small write per metrics table. After the
+  * data commit, both metric tables are built on the driver from the one
+  * observed row and committed, `bucket_stats` then `rule_lineage`
+  * (Metrics explains why the counts are exact under task retries).
   *
   * At real scale the input table would itself be bucket-partitioned
   * (Iceberg `bucket(conv_id, B)` partition transform), making each
@@ -40,7 +48,9 @@ object CheckpointedRun {
   /** `afterDataCommit` is a fault-injection seam (crash drills): invoked
     * with the bucket id right after that bucket's DATA commit and
     * before its metrics commits — the window where a crash must force
-    * the bucket to re-run on restart.
+    * the bucket to re-run on restart. The bucket's counters were
+    * observed during the data write, but neither metrics table holds
+    * them yet.
     */
   def run(input: Dataset[Turn], outRoot: String, nBuckets: Int,
           metricsRoot: Option[String] = None,
@@ -144,9 +154,9 @@ object CheckpointedRun {
       // broadcast-gates the benchmark gram set once instead of per
       // bucket. All three are deterministic (the LSH too), so a resumed
       // run recomputes identical sets and re-run buckets stay
-      // bit-identical. The list order is the lineage order: turn-level
-      // boilerplate then decontamination before conversation-level near
-      // dup — finer-grained reasons first.
+      // bit-identical. The list order is RuleConfig.LineageOrder's:
+      // turn-level boilerplate then decontamination before
+      // conversation-level near dup — finer-grained reasons first.
       val flagRules: Seq[DataFrame => DataFrame] = if (todo.isEmpty) Nil else Seq(
         // the model-free raw census (normalize + hash only; the
         // per-bucket labeling already pays the model pass)
@@ -183,16 +193,18 @@ object CheckpointedRun {
       todo.foreach { b =>
         val base = SkewSplit.route(scored.where(bucket === b), skewMaxTurns,
           giants.map(_.getOrElse(b, Array.empty[String])), pplBounds)
-        table.commitBucket(flagRules.foldLeft(base)((df, flag) => flag(df)), b)
+        val labeled = flagRules.foldLeft(base)((df, flag) => flag(df))
+        val obs = Observation()
+        val written =
+          if (metricTables.isDefined) Metrics.observeCounters(labeled, obs) else labeled
+        val version = table.commitBucket(written, b)
         afterDataCommit(b)
         metricTables.foreach { case (statsT, lineageT) =>
-          // metrics read the bucket's COMMITTED parquet back instead of
-          // re-running the pipeline per metrics table (2 extra pipeline
-          // executions per bucket in round 1), and are thereby derived
-          // from exactly the bytes the data snapshot serves
-          val committed = input.sparkSession.read.parquet(s"$outRoot/data/bucket=$b")
-          statsT.commitBucket(Metrics.bucketStats(committed, nBuckets), b)
-          lineageT.commitBucket(Metrics.ruleLineage(committed, nBuckets), b)
+          // the commit's footer row counts, which the counters must match
+          val rows = table.filesAt(version).filter(_.bucket == b).map(_.rows).sum
+          val (stats, lineage) = Metrics.observedTables(written, obs, b, rows)
+          statsT.commitBucket(stats, b)
+          lineageT.commitBucket(lineage, b)
         }
       }
     } finally cached.foreach(_.unpersist(blocking = false))

@@ -18,6 +18,9 @@ import graft.schema.Turn
   *     [--decontaminate-ngram 8] [--decontaminate-min-matches 1] \
   *     [--decontaminate-text-col text]
   *
+  * A malformed command line (an unknown or repeated key, a key with no
+  * value, a stray token) fails before the session starts.
+  *
   * Runs checkpoint-resumable: re-submitting after a failure skips
   * committed buckets. Lineage + counters land under --metrics
   * (`bucket_stats`, `rule_lineage`, and — when the opt-in
@@ -36,10 +39,34 @@ import graft.schema.Turn
   *    convention) with the eval set, reason `contaminated`.
   */
 object Main {
+
+  /** The flags Main reads, without their leading `--`. */
+  val Keys: Seq[String] = Seq("input", "output", "metrics", "buckets", "skew-max-turns",
+    "conv-neardup-threshold", "boilerplate-min-convs", "ppl-iqr", "decontaminate-bench",
+    "decontaminate-ngram", "decontaminate-min-matches", "decontaminate-text-col")
+
+  /** `--key value` pairs of a command line, keyed without the `--`; Left
+    * with a message naming the known keys for an unknown or repeated
+    * key, a key with no value, or a token that is not a key.
+    */
+  def parseArgs(args: Seq[String]): Either[String, Map[String, String]] = {
+    def usage(problem: String) =
+      Left(s"$problem; known keys: ${Keys.map("--" + _).mkString(" ")}")
+    @annotation.tailrec
+    def go(rest: List[String], acc: Map[String, String]): Either[String, Map[String, String]] =
+      rest match {
+        case Nil => Right(acc)
+        case k :: _ if !k.startsWith("--") => usage(s"stray token '$k'")
+        case k :: _ if !Keys.contains(k.drop(2)) => usage(s"unknown key '$k'")
+        case k :: _ if acc.contains(k.drop(2)) => usage(s"key '$k' given twice")
+        case k :: v :: tail if !v.startsWith("--") => go(tail, acc + (k.drop(2) -> v))
+        case k :: _ => usage(s"key '$k' has no value")
+      }
+    go(args.toList, Map.empty)
+  }
+
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+    val opts = parseArgs(args.toSeq).fold(e => throw new IllegalArgumentException(e), identity)
     val input = opts.getOrElse("input",
       sys.error("--input <parquet dir> required"))
     val output = opts.getOrElse("output",

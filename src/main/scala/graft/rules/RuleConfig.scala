@@ -146,6 +146,13 @@ object RuleConfig {
     */
   val RuleContaminated = "contaminated"
 
+  /** Lineage order: the order reasons appear in every turn's
+    * `drop_reasons` — the per-turn rules, then the opt-in rules in the
+    * order they are applied (turn-level before conversation-level).
+    */
+  val LineageOrder: Seq[String] =
+    RuleOrder ++ Seq(RuleBoilerplate, RuleContaminated, RuleConvNearDup)
+
   // ------------------------------------------------------------- scrubbing
 
   /** Whitespace normalization applied before everything else (C3,

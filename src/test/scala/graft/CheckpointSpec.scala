@@ -558,23 +558,8 @@ class CheckpointSpec extends AnyFunSuite {
   test("partially committed table: a changed opt-in fails before any corpus pass, unchanged resume == direct") {
     val spark = TestSpark.spark
     import spark.implicits._
-    // all four opt-ins fire on this corpus: a canned opening line
-    // (boilerplate), a leaked eval phrase (decontamination), verbatim
-    // clones (conv near-dup), and IQR ppl bounds
-    val canned = "this conversation may be recorded for quality assurance purposes"
-    val leak = "the quick zephyr vexes the jaded dwarf mightily"
-    val base = TranscriptGen.generateLocal(40, seed = 25, skewCap = 200).map { t =>
-      if (t.conv_id.endsWith("3") && t.turn_idx == 0) t.copy(text = canned)
-      else if (t.conv_id.endsWith("4") && t.turn_idx == 1)
-        t.copy(text = s"as we said before $leak and nothing else matters")
-      else t
-    }
-    val turns = base ++ base.filter(_.conv_id.endsWith("0"))
-      .map(t => t.copy(conv_id = "d" + t.conv_id))
-    val ds = spark.createDataset(turns)
-    val benchDir = Files.createTempDirectory("graft_guard_bench").toString
-    Seq(s"eval prompt one $leak", "eval prompt two entirely clean")
-      .toDF("text").write.mode("overwrite").parquet(benchDir)
+    val ds = spark.createDataset(CheckpointSpec.allOptInTurns)
+    val benchDir = CheckpointSpec.allOptInBench()
     val nd = QualityFilter.ConvNearDupConfig()
     val bp = QualityFilter.BoilerplateConfig()
     val ct = QualityFilter.ContaminationConfig(benchPath = benchDir)
@@ -641,5 +626,109 @@ class CheckpointSpec extends AnyFunSuite {
     Seq("boilerplate", "contaminated", "conv_neardup", "perplexity").foreach(r =>
       assert(direct.exists(_.drop_reasons.contains(r)), s"$r never fires"))
     assert(labeled(CheckpointedRun.readOutput(spark, root, 4)) == direct)
+  }
+
+  private def tableRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq.toList).sortBy(_.toString).toList
+
+  /** The committed metrics tables == the groupBy tables over `labeled`. */
+  private def assertMetricsMatch(mroot: String, nBuckets: Int,
+                                 labeled: org.apache.spark.sql.DataFrame): Unit = {
+    val spark = TestSpark.spark
+    Seq("bucket_stats" -> Metrics.bucketStats(labeled, nBuckets),
+        "rule_lineage" -> Metrics.ruleLineage(labeled, nBuckets)).foreach { case (name, want) =>
+      val got = graft.io.SnapshotTable(s"$mroot/$name", nBuckets).read(spark)
+      assert(got.columns.toSeq == want.columns.toSeq, name)
+      assert(got.schema.map(_.dataType) == want.schema.map(_.dataType), name)
+      assert(tableRows(got) == tableRows(want), name)
+    }
+  }
+
+  test("metrics are counted during the data write: <= 4 jobs a bucket, no read-back") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_counted").toString
+    val mroot = Files.createTempDirectory("graft_counted_m").toString
+    val ds = spark.createDataset(TranscriptGen.generateLocal(40, seed = 11, skewCap = 100))
+    val nBuckets = 3
+    val tables = Seq(root, s"$mroot/bucket_stats", s"$mroot/rule_lineage")
+      .map(graft.io.SnapshotTable(_, nBuckets))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Seq[Boolean])]
+    val (res, jobs) = JobLog.of(spark.sparkContext) {
+      CheckpointedRun.run(ds, root, nBuckets, metricsRoot = Some(mroot),
+        afterDataCommit = b => seen += b -> tables.map(_.completedBuckets.contains(b)))
+    }
+    assert(res.bucketsComputed == (0 until nBuckets))
+    // the torn window the crash drills rely on: data committed, metrics not
+    assert(seen == (0 until nBuckets).map(_ -> Seq(true, false, false)))
+    assert(jobs.size <= 4 * nBuckets, s"${jobs.size} jobs for $nBuckets buckets")
+    // the input is in memory: a job scanning files reads the run's own output
+    assert(!jobs.exists(_.rdds.exists(_.name == "FileScanRDD")),
+      jobs.map(j => j.id -> j.rdds.map(_.name)).mkString("\n"))
+    assertMetricsMatch(mroot, nBuckets, CheckpointedRun.readOutput(spark, root, nBuckets))
+    assertMetricsMatch(mroot, nBuckets, QualityFilter.label(ds))
+  }
+
+  test("counted metrics with all four opt-ins == groupBy tables over the output") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_counted_opt").toString
+    val mroot = Files.createTempDirectory("graft_counted_opt_m").toString
+    CheckpointedRun.run(spark.createDataset(CheckpointSpec.allOptInTurns), root, 4,
+      metricsRoot = Some(mroot),
+      convNearDup = Some(QualityFilter.ConvNearDupConfig()),
+      boilerplate = Some(QualityFilter.BoilerplateConfig()), pplIqrK = Some(1.5),
+      decontaminate = Some(QualityFilter.ContaminationConfig(
+        benchPath = CheckpointSpec.allOptInBench())))
+    import org.apache.spark.sql.functions.{array_contains, col}
+    val out = CheckpointedRun.readOutput(spark, root, 4)
+    Seq("boilerplate", "contaminated", "conv_neardup", "perplexity").foreach(r =>
+      assert(!out.where(array_contains(col("drop_reasons"), r)).isEmpty, s"$r never fires"))
+    assertMetricsMatch(mroot, 4, out)
+  }
+
+  test("counters stay exact when a data-write task's first attempt fails (local[4,3])") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft_retry").toString
+    val mroot = Files.createTempDirectory("graft_retry_m").toString
+    // the parent's JVM flags (--add-opens, -D...) with a small heap
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx")).toSeq
+    val cmd = Seq(sys.props("java.home") + "/bin/java") ++ jvmArgs ++
+      Seq("-Xmx1g", "-cp", sys.props("java.class.path"), "graft.RetriedMetricsRun", root, mroot)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val output = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
+    assert(proc.waitFor() == 0, output.takeRight(40).mkString("\n"))
+    val result = output.filter(_.startsWith("failed="))
+    assert(result == Seq("failed=2 stats=true lineage=true"), output.takeRight(40).mkString("\n"))
+  }
+
+}
+
+object CheckpointSpec {
+  // all four opt-ins fire on this corpus: a canned opening line
+  // (boilerplate), a leaked eval phrase (decontamination), verbatim
+  // clones (conv near-dup), and IQR ppl bounds
+  private val leak = "the quick zephyr vexes the jaded dwarf mightily"
+
+  def allOptInTurns: Seq[graft.schema.Turn] = {
+    val canned = "this conversation may be recorded for quality assurance purposes"
+    val base = TranscriptGen.generateLocal(40, seed = 25, skewCap = 200).map { t =>
+      if (t.conv_id.endsWith("3") && t.turn_idx == 0) t.copy(text = canned)
+      else if (t.conv_id.endsWith("4") && t.turn_idx == 1)
+        t.copy(text = s"as we said before $leak and nothing else matters")
+      else t
+    }
+    base ++ base.filter(_.conv_id.endsWith("0")).map(t => t.copy(conv_id = "d" + t.conv_id))
+  }
+
+  /** Writes the eval set `allOptInTurns` leaks from; returns its dir. */
+  def allOptInBench(): String = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val benchDir = Files.createTempDirectory("graft_guard_bench").toString
+    Seq(s"eval prompt one $leak", "eval prompt two entirely clean")
+      .toDF("text").write.mode("overwrite").parquet(benchDir)
+    benchDir
   }
 }

@@ -129,9 +129,16 @@ class DecontaminateSpec extends AnyFunSuite {
     val sc = TestSpark.spark.sparkContext
     for (gate <- Seq(0L, 1L << 20)) {
       val before = sc.getPersistentRDDs.keySet.toSet
-      val df = Decontaminate.decontaminate(docsDf(corpus), docsDf(bench), "text", "doc_id",
-        n = 3, minMatches = 1, maxBroadcastGrams = gate)
-      assert(df.collect().length == corpus.length)
+      // both paths: the gate's count and collect read the bench set
+      // unpersisted, so no job of the call computes a persisted RDD
+      val (df, jobs) = JobLog.of(sc) {
+        val df = Decontaminate.decontaminate(docsDf(corpus), docsDf(bench), "text", "doc_id",
+          n = 3, minMatches = 1, maxBroadcastGrams = gate)
+        assert(df.collect().length == corpus.length)
+        df
+      }
+      val persisted = jobs.exists(_.rdds.exists(_.storageLevel.isValid))
+      assert(jobs.nonEmpty && !persisted, s"gate=$gate: a job computed a persisted RDD")
       assert(sc.getPersistentRDDs.keySet.toSet == before, s"gate=$gate: a persist outlived the call")
       val plan = df.queryExecution.executedPlan
       val helper = new AdaptiveSparkPlanHelper {}
