@@ -5,9 +5,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 
 /** Iceberg-shaped snapshot table on plain Parquet (no Iceberg runtime
   * jar offline — SURVEY.md §7.4): versioned manifests + atomic version
@@ -17,10 +18,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Layout:
   *   <root>/data/bucket=<k>/part-*.parquet   (one dir per commit unit)
-  *   <root>/_graft/manifest-v<N>.json        (snapshot N: completed buckets
-  *                                            + per-file column stats)
+  *   <root>/_graft/manifest-v<N>.json        (snapshot N: bucket count,
+  *                                            completed buckets, per-file
+  *                                            column stats, row buckets)
   *   <root>/_graft/VERSION                   (current snapshot pointer,
   *                                            updated by atomic rename)
+  *
+  * ROW BUCKETS: a bucket of a few driver-side rows (a metrics table's
+  * counters) is committed with [[commitRows]] into the manifest itself,
+  * next to the table's Spark schema — one manifest write and one
+  * VERSION rename, no Spark job and no data file. Its rows are carried
+  * forward like file entries, and reads union them by name with the
+  * file buckets, so a table whose buckets were written either way reads
+  * as one table. Only bigint and string columns are encoded.
   *
   * Readers only see buckets listed in the current manifest, so a crash
   * mid-bucket leaves garbage files but never a dirty read (the
@@ -54,9 +64,18 @@ final class SnapshotTable(val root: String, val nBuckets: Int) {
     else 0
 
   /** Buckets committed as of the current snapshot. Manifest format:
-    * {"snapshot":N,"parent":M,"buckets":[1,2,...],"files":[...]}
+    * {"snapshot":N,"parent":M,"n_buckets":B,"buckets":[1,2,...],
+    *  "files":[...],"schema":{...},"rows":[{"bucket":k,"values":[[...]]}]}
+    * ("schema" and "rows" only while the table has row buckets).
     */
   def completedBuckets: Set[Int] = bucketsAt(currentVersion)
+
+  /** The bucket count the current snapshot was committed under; None
+    * for an empty table or a manifest written before the count was
+    * recorded.
+    */
+  def recordedBuckets: Option[Int] =
+    manifestAt(currentVersion).flatMap(m => Option(m.get("n_buckets"))).map(_.asInt())
 
   /** Write one bucket's rows and commit it to a new snapshot. The data
     * write is idempotent (overwrite of the bucket dir); the commit is
@@ -79,6 +98,19 @@ final class SnapshotTable(val root: String, val nBuckets: Int) {
     commitBuckets(Set(bucket))
   }
 
+  /** Commit bucket `bucket` as the driver-side `rows`, stored in the
+    * manifest (see ROW BUCKETS above): no Spark job, no data file. A
+    * re-commit replaces the bucket's rows, or its files. Fails before
+    * writing anything on a column type the codec does not encode, or on
+    * a schema other than the one the table's carried row buckets have.
+    */
+  def commitRows(rows: Rows, bucket: Int): Int = {
+    rows.schema.fields.foreach(f => require(f.dataType == LongType || f.dataType == StringType,
+      s"$root: column '${f.name}' has type ${f.dataType.simpleString}; " +
+        "row buckets encode only bigint and string columns"))
+    commit(Set(bucket), Some(rows))
+  }
+
   /** Record buckets (already written) in a new snapshot.
     *
     * Single-writer protocol (like Iceberg's optimistic commit): the
@@ -90,26 +122,48 @@ final class SnapshotTable(val root: String, val nBuckets: Int) {
     * File entries: freshly footer-scanned for `buckets`; carried
     * forward from the parent snapshot for previously committed buckets
     * (manifests are immutable, so the parent's entries are still true
-    * for untouched bucket dirs).
+    * for untouched bucket dirs). Row buckets are carried the same way.
     */
-  def commitBuckets(buckets: Set[Int]): Int = {
+  def commitBuckets(buckets: Set[Int]): Int = commit(buckets, None)
+
+  /** One commit of `buckets`: their files, or (`rows`) their one row
+    * bucket, replace whatever the parent snapshot held for them.
+    */
+  private def commit(buckets: Set[Int], rows: Option[Rows]): Int = {
     val v = currentVersion
     // allocate PAST the newest existing manifest: after a rollback the
     // divergent future manifests stay readable (time travel) until
     // expiry; the new commit's parent is the rolled-back snapshot
     val newV = math.max(v, snapshotHistory.lastOption.getOrElse(0)) + 1
-    val all = (completedBuckets ++ buckets).toSeq.sorted
-    val carried = filesAt(v).filterNot(f => buckets.contains(f.bucket))
-    val fresh = buckets.toSeq.sorted.flatMap(scanBucketFooters)
-    val files = carried ++ fresh
+    // the parent is read once; its file and row entries for untouched
+    // buckets are carried as JSON, never decoded
+    val parent = manifestAt(v)
+    def carry(field: String): Seq[JsonNode] = parent.flatMap(m => Option(m.get(field))).toSeq
+      .flatMap(_.elements().asScala).filterNot(n => buckets.contains(n.get("bucket").asInt()))
+    val all = (parent.map(bucketsOf).getOrElse(Set.empty) ++ buckets).toSeq.sorted
+    val fresh = if (rows.isDefined) Nil else buckets.toSeq.sorted.flatMap(scanBucketFooters)
+    val carriedRows = carry("rows")
+    val carriedSchema = parent.filter(_ => carriedRows.nonEmpty).map(schemaOf)
+    for (r <- rows; c <- carriedSchema)
+      require(r.schema == c, s"$root: rows of schema ${r.schema.simpleString} " +
+        s"cannot join row buckets of schema ${c.simpleString}")
+    val rowNodes = (carriedRows ++ rows.map(rowsToJson(buckets.head, _)))
+      .sortBy(_.get("bucket").asInt())
 
     val json = mapper.createObjectNode()
     json.put("snapshot", newV)
     json.put("parent", v)
+    json.put("n_buckets", nBuckets)
     val barr = json.putArray("buckets")
     all.foreach(barr.add)
     val farr = json.putArray("files")
-    files.foreach(f => farr.add(fileToJson(f)))
+    carry("files").foreach(farr.add)
+    fresh.foreach(f => farr.add(fileToJson(f)))
+    rows.map(_.schema).orElse(carriedSchema).foreach { schema =>
+      json.set[JsonNode]("schema", mapper.readTree(schema.json))
+      val rarr = json.putArray("rows")
+      rowNodes.foreach(rarr.add)
+    }
 
     Files.write(meta.resolve(s"manifest-v$newV.json"),
       mapper.writeValueAsBytes(json),
@@ -130,12 +184,13 @@ final class SnapshotTable(val root: String, val nBuckets: Int) {
     * `version` are visible, regardless of later commits.
     */
   def readAt(spark: SparkSession, version: Int): DataFrame = {
-    val done = bucketsAt(version)
-    if (done.isEmpty) {
-      spark.emptyDataFrame
-    } else {
-      val paths = done.toSeq.sorted.map(b => s"$root/data/bucket=$b")
-      spark.read.parquet(paths: _*)
+    val m = manifestAt(version)
+    val done = m.map(bucketsOf).getOrElse(Set.empty)
+    if (done.isEmpty) spark.emptyDataFrame
+    else {
+      val rowBuckets = m.map(rowBucketsOf).get
+      val dirs = done.toSeq.sorted.filterNot(rowBuckets.contains).map(b => s"$root/data/bucket=$b")
+      scan(spark, rowBuckets, dirs).get
     }
   }
 
@@ -144,13 +199,16 @@ final class SnapshotTable(val root: String, val nBuckets: Int) {
     * with no recorded entries — a legacy manifest can never lose
     * rows). Compose the predicate from [[SnapshotTable.overlapsLong]] /
     * [[SnapshotTable.overlapsString]]; a file with no stats for the
-    * probed column always survives.
+    * probed column always survives. Row buckets have no files and are
+    * always read.
     */
   def readAt(spark: SparkSession, version: Int, prune: DataFile => Boolean): DataFrame = {
-    val done = bucketsAt(version)
+    val m = manifestAt(version)
+    val done = m.map(bucketsOf).getOrElse(Set.empty)
     if (done.isEmpty) return spark.emptyDataFrame
-    val byBucket = filesAt(version).filter(f => done.contains(f.bucket)).groupBy(_.bucket)
-    val (fileBuckets, dirBuckets) = done.toSeq.sorted.partition { b =>
+    val rowBuckets = m.map(rowBucketsOf).get
+    val byBucket = m.map(filesOf).get.filter(f => done.contains(f.bucket)).groupBy(_.bucket)
+    val (fileBuckets, dirBuckets) = done.toSeq.sorted.filterNot(rowBuckets.contains).partition { b =>
       // file-granularity pruning only when every manifest path still
       // exists: a later re-commit of the bucket (idempotent overwrite)
       // replaces its part files, and the dir-based fallback then gives
@@ -160,31 +218,54 @@ final class SnapshotTable(val root: String, val nBuckets: Int) {
     }
     val kept = fileBuckets.flatMap(b => byBucket(b).filter(prune))
       .map(f => s"$root/${f.path}")
-    val paths = kept ++ dirBuckets.map(b => s"$root/data/bucket=$b")
-    if (paths.isEmpty) {
-      // all files pruned: preserve the snapshot's schema, zero rows
-      readAt(spark, version).where(org.apache.spark.sql.functions.lit(false))
-    } else spark.read.parquet(paths: _*)
+    // all files pruned and no row buckets: the snapshot's schema, zero rows
+    scan(spark, rowBuckets, kept ++ dirBuckets.map(b => s"$root/data/bucket=$b"))
+      .getOrElse(readAt(spark, version).where(org.apache.spark.sql.functions.lit(false)))
   }
 
-  def bucketsAt(version: Int): Set[Int] = manifestAt(version) match {
-    case None => Set.empty
-    case Some(m) =>
-      val arr = m.get("buckets")
-      if (arr == null || !arr.isArray) Set.empty
-      else arr.elements().asScala.map(_.asInt()).toSet
+  /** The parquet `paths` unioned by name with the `rowBuckets`' rows;
+    * None when there are neither.
+    */
+  private def scan(spark: SparkSession, rowBuckets: Map[Int, Rows],
+                   paths: Seq[String]): Option[DataFrame] = {
+    val files = if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+    val rows = rowBuckets.values.headOption.map(r =>
+      Rows(r.schema, rowBuckets.toSeq.sortBy(_._1).flatMap(_._2.rows)).toDF(spark))
+    (files ++ rows).reduceOption(_ unionByName _)
+  }
+
+  def bucketsAt(version: Int): Set[Int] = manifestAt(version).map(bucketsOf).getOrElse(Set.empty)
+
+  private def bucketsOf(m: ObjectNode): Set[Int] = {
+    val arr = m.get("buckets")
+    if (arr == null || !arr.isArray) Set.empty
+    else arr.elements().asScala.map(_.asInt()).toSet
   }
 
   /** Per-file manifest entries (path relative to `root`, row count,
     * column bounds) as of `version`; empty for pre-stats manifests.
     */
-  def filesAt(version: Int): Seq[DataFile] = manifestAt(version) match {
-    case None => Seq.empty
-    case Some(m) =>
-      val arr = m.get("files")
-      if (arr == null || !arr.isArray) Seq.empty
-      else arr.elements().asScala.map(jsonToFile).toSeq
+  def filesAt(version: Int): Seq[DataFile] = manifestAt(version).map(filesOf).getOrElse(Seq.empty)
+
+  private def filesOf(m: ObjectNode): Seq[DataFile] = {
+    val arr = m.get("files")
+    if (arr == null || !arr.isArray) Seq.empty
+    else arr.elements().asScala.map(jsonToFile).toSeq
   }
+
+  /** A manifest's row buckets by bucket (see ROW BUCKETS above). */
+  private def rowBucketsOf(m: ObjectNode): Map[Int, Rows] =
+    if (m.get("schema") == null) Map.empty
+    else {
+      val schema = schemaOf(m)
+      m.get("rows").elements().asScala.map { o =>
+        o.get("bucket").asInt() ->
+          Rows(schema, o.get("values").elements().asScala.map(jsonToRow(schema, _)).toSeq)
+      }.toMap
+    }
+
+  private def schemaOf(m: ObjectNode): StructType =
+    DataType.fromJson(m.get("schema").toString).asInstanceOf[StructType]
 
   private def manifestAt(version: Int): Option[ObjectNode] = {
     if (version <= 0) return None
@@ -229,7 +310,34 @@ final class SnapshotTable(val root: String, val nBuckets: Int) {
     o
   }
 
-  private def jsonToFile(n: com.fasterxml.jackson.databind.JsonNode): DataFile = {
+  private def rowsToJson(bucket: Int, rows: Rows): ObjectNode = {
+    val o = mapper.createObjectNode()
+    o.put("bucket", bucket)
+    val vals = o.putArray("values")
+    rows.rows.foreach { r =>
+      val a = vals.addArray()
+      rows.schema.fields.indices.foreach { i =>
+        if (r.isNullAt(i)) a.addNull()
+        else rows.schema(i).dataType match {
+          case LongType => a.add(r.getLong(i))
+          case _ => a.add(r.getString(i)) // StringType: commitRows admits no other
+        }
+      }
+    }
+    o
+  }
+
+  private def jsonToRow(schema: StructType, a: JsonNode): Row =
+    Row.fromSeq(schema.fields.indices.map { i =>
+      val n = a.get(i)
+      if (n.isNull) null
+      else schema(i).dataType match {
+        case LongType => n.asLong()
+        case _ => n.asText()
+      }
+    })
+
+  private def jsonToFile(n: JsonNode): DataFile = {
     val bounds = Option(n.get("cols")).toSeq.flatMap { cols =>
       cols.properties().asScala.map { e =>
         val c = e.getValue
@@ -317,6 +425,12 @@ object SnapshotTable {
     */
   final case class DataFile(bucket: Int, path: String, rows: Long,
                             bounds: Map[String, Bounds])
+
+  /** One row bucket: driver-side rows and the schema they have. */
+  final case class Rows(schema: StructType, rows: Seq[Row]) {
+    /** A local relation over the rows: no Spark job to build. */
+    def toDF(spark: SparkSession): DataFrame = spark.createDataFrame(rows.asJava, schema)
+  }
 
   /** Range-overlap predicates for [[SnapshotTable.readAt]] pruning:
     * true (keep the file) unless the recorded bounds PROVE the file

@@ -1,4 +1,4 @@
-package graft
+package graft.metrics
 
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 

@@ -3,12 +3,15 @@ package graft.metrics
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, CollectMetrics}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.io.SnapshotTable
 import graft.rules.RuleConfig
+import graft.schema.LabeledTurn
 
 /** Per-partition lineage + counters (north rule): kept/dropped/scrubbed
   * per rule per conversation-bucket, written to a metrics table next to
@@ -18,7 +21,11 @@ import graft.rules.RuleConfig
   * A bucket's counters are defined ONCE ([[counters]]); `bucket_stats`
   * and `rule_lineage` are both projections of that one list, whether it
   * is aggregated per bucket by a `groupBy` or counted by an
-  * `Observation` while the bucket's rows are written.
+  * `Observation` while the bucket's rows are written. The runner
+  * builds a bucket's two tables from its observed row on the driver
+  * ([[CounterRows]]) and commits them as row buckets of the metrics
+  * tables' manifests (`SnapshotTable.commitRows`): no Spark job and no
+  * data file, so with metrics a bucket runs only its data write's jobs.
   *
   * Observed counters are exact under task retries. Observations are
   * accumulators, and Spark applies a task's accumulator updates only
@@ -91,31 +98,48 @@ object Metrics {
     */
   private val ObservationWait = 120.seconds
 
-  /** `(bucket_stats, rule_lineage)` of bucket `bucket`, built on the
-    * driver from the counters `obs` observed over `observed` (a frame of
-    * [[observeCounters]]) during the action that wrote its
-    * `writtenRows` rows — the same rows and schema [[bucketStats]] and
-    * [[ruleLineage]] give over those rows. An empty bucket gives zero
-    * rows in both tables.
+  /** Builds buckets' `(bucket_stats, rule_lineage)` rows on the driver
+    * from the counters observed while each bucket was written (a frame
+    * of [[observeCounters]]): the same rows, names and types
+    * [[bucketStats]] and [[ruleLineage]] give over the written rows —
+    * `bucket` plus the stats counters, and one `(bucket, rule,
+    * n_dropped)` row per lineage rule that dropped a turn. Both schemas
+    * come from the groupBy over zero labeled rows, analyzed once here
+    * (no job); the counters' types do not depend on the input's
+    * nullability, so they hold for every bucket. An empty bucket gives
+    * zero rows in both tables.
     *
     * An optimizer can prune an observe node over an empty subtree out
     * of the executed plan (see [[truncationMetrics]]); Spark then
     * completes the observation with no fields. That reads as zero
-    * turns, which `writtenRows` must confirm: any disagreement between
-    * the counters and the rows written fails.
+    * turns, which the written row count must confirm: any disagreement
+    * between the counters and the rows written fails.
     */
-  def observedTables(observed: DataFrame, obs: Observation, bucket: Int,
-                     writtenRows: Long): (DataFrame, DataFrame) = {
-    val spark = observed.sparkSession
-    val row = Await.result(obs.future, ObservationWait)
-    val nTurns = if (row.length == 0) 0L else row.getLong(0) // n_turns
-    require(nTurns == writtenRows,
-      s"bucket $bucket: the observation counted $nTurns turns but $writtenRows were written")
-    // the groupBy over zero rows: no rows, and the exact counted schema
-    val none = countedBy(spark.createDataFrame(java.util.List.of[Row](), observed.schema), 1)
-    val counted = if (nTurns == 0) none else spark.createDataFrame(
-      java.util.List.of(Row.fromSeq(bucket.toLong +: row.toSeq)), none.schema)
-    (statsOf(counted).coalesce(1), lineageOf(counted).coalesce(1))
+  final class CounterRows(spark: SparkSession) {
+    private val none = countedBy(
+      spark.createDataFrame(java.util.List.of[Row](), Encoders.product[LabeledTurn].schema), 1)
+    val statsSchema: StructType = statsOf(none).schema
+    val lineageSchema: StructType = lineageOf(none).schema
+
+    /** Bucket `bucket`'s rows from `obs`, observed during the action that
+      * wrote its `writtenRows` rows.
+      */
+    def of(obs: Observation, bucket: Int,
+           writtenRows: Long): (SnapshotTable.Rows, SnapshotTable.Rows) = {
+      val row = Await.result(obs.future, ObservationWait)
+      val nTurns = if (row.length == 0) 0L else row.getLong(0) // n_turns
+      require(nTurns == writtenRows,
+        s"bucket $bucket: the observation counted $nTurns turns but $writtenRows were written")
+      if (nTurns == 0) (SnapshotTable.Rows(statsSchema, Nil), SnapshotTable.Rows(lineageSchema, Nil))
+      else {
+        val (stats, drops) = row.toSeq.splitAt(statsSchema.length - 1)
+        val lineage = RuleConfig.LineageOrder.zip(drops).collect {
+          case (rule, n: Long) if n > 0 => Row(bucket.toLong, rule, n)
+        }
+        (SnapshotTable.Rows(statsSchema, Seq(Row.fromSeq(bucket.toLong +: stats))),
+          SnapshotTable.Rows(lineageSchema, lineage))
+      }
+    }
   }
 
   /** Surface the LSH bucket-cap observations (capped_buckets /
@@ -140,9 +164,14 @@ object Metrics {
     * as exactly that aggregate — a second pass over the observed
     * subtree on this rare path, and a real value, never a default.
     */
-  def truncationMetrics(df: DataFrame, sources: Seq[String]): DataFrame = {
+  def truncationMetrics(df: DataFrame, sources: Seq[String]): DataFrame =
+    truncationRows(df, sources).toDF(df.sparkSession)
+
+  /** [[truncationMetrics]]'s rows on the driver, as a metrics table's
+    * row bucket.
+    */
+  def truncationRows(df: DataFrame, sources: Seq[String]): SnapshotTable.Rows = {
     val spark = df.sparkSession
-    import spark.implicits._
     // the one action, on df's OWN QueryExecution: Dataset.foreach/rdd
     // would build a separate execution (deserializer path) whose
     // accumulators this queryExecution never sees
@@ -170,10 +199,15 @@ object Metrics {
               s"(have: ${names.mkString(",")})")
         if (row.isNullAt(i)) 0L else row.getLong(i)
       }
-      (src, metric("capped_buckets"), metric("dropped_ids"))
+      Row(src, metric("capped_buckets"), metric("dropped_ids"))
     }
-    rows.toDF("source", "capped_buckets", "dropped_ids")
+    SnapshotTable.Rows(TruncationSchema, rows)
   }
+
+  private val TruncationSchema = StructType(Seq(
+    StructField("source", StringType),
+    StructField("capped_buckets", LongType, nullable = false),
+    StructField("dropped_ids", LongType, nullable = false)))
 
   /** Corpus quality score — the reference's A14 formula
     * (utils.py:491-509) recast: 100 * kept / total.

@@ -27,11 +27,17 @@ import graft.schema.Turn
   *
   * Metrics (`metricsRoot`): a bucket's counters are counted by an
   * `Observation` on the frame its data commit writes, not read back
-  * from the committed files, so a bucket runs the label-and-write job's
-  * two Spark jobs plus one small write per metrics table. After the
-  * data commit, both metric tables are built on the driver from the one
-  * observed row and committed, `bucket_stats` then `rule_lineage`
-  * (Metrics explains why the counts are exact under task retries).
+  * from the committed files. After the data commit, both metric
+  * tables' rows are built on the driver from the one observed row and
+  * committed into each table's manifest, `bucket_stats` then
+  * `rule_lineage` — a manifest write and a VERSION rename each, no
+  * Spark job — so a bucket runs only the label-and-write job's two
+  * Spark jobs (Metrics explains why the counts are exact under task
+  * retries). The cd2 truncation rows are committed the same way.
+  *
+  * Every manifest records the bucket count, and a resume under another
+  * `nBuckets` fails before any corpus pass: conversations would hash to
+  * other buckets, so committed turns would be labeled twice or never.
   *
   * At real scale the input table would itself be bucket-partitioned
   * (Iceberg `bucket(conv_id, B)` partition transform), making each
@@ -71,6 +77,7 @@ object CheckpointedRun {
     val metricTables = metricsRoot.map(mr =>
       (SnapshotTable(s"$mr/bucket_stats", nBuckets),
         SnapshotTable(s"$mr/rule_lineage", nBuckets)))
+    lazy val counterRows = new Metrics.CounterRows(input.sparkSession)
 
     // a bucket counts as done only when data AND metrics committed it:
     // a crash between the data commit and the metrics commits must
@@ -83,6 +90,14 @@ object CheckpointedRun {
       case None => table.completedBuckets
     }
     val todo = (0 until nBuckets).filterNot(done)
+
+    // BUCKET-COUNT guard: a table records the count it was committed
+    // under (a manifest without one predates the record and resumes)
+    (table +: metricTables.toSeq.flatMap { case (s, l) => Seq(s, l) }).foreach { t =>
+      t.recordedBuckets.foreach(recorded => require(recorded == nBuckets,
+        s"table ${t.root} was committed with $recorded buckets but this run asks for " +
+          s"$nBuckets — finish the run with $recorded buckets or start a fresh output root"))
+    }
 
     // LABEL-SEMANTICS guard (LabelingCfg): while any bucket is
     // committed, this run's settings must match the recorded ones. The
@@ -179,8 +194,8 @@ object CheckpointedRun {
           val d = persisted(QualityFilter.convNearDupDropIds(input.toDF(), cfg))
           metricsRoot match {
             case Some(mr) =>
-              val trunc = Metrics.truncationMetrics(d, Seq("cd2"))
-              SnapshotTable(s"$mr/truncation", 1).commitBucket(trunc, 0)
+              SnapshotTable(s"$mr/truncation", 1)
+                .commitRows(Metrics.truncationRows(d, Seq("cd2")), 0)
             case None => d.count() // materialize the cache in one pass
           }
           QualityFilter.withConvNearDup(_: DataFrame, d)
@@ -202,9 +217,9 @@ object CheckpointedRun {
         metricTables.foreach { case (statsT, lineageT) =>
           // the commit's footer row counts, which the counters must match
           val rows = table.filesAt(version).filter(_.bucket == b).map(_.rows).sum
-          val (stats, lineage) = Metrics.observedTables(written, obs, b, rows)
-          statsT.commitBucket(stats, b)
-          lineageT.commitBucket(lineage, b)
+          val (stats, lineage) = counterRows.of(obs, b, rows)
+          statsT.commitRows(stats, b)
+          lineageT.commitRows(lineage, b)
         }
       }
     } finally cached.foreach(_.unpersist(blocking = false))

@@ -9,7 +9,9 @@ import graft.pipeline.CheckpointedRun
 /** Scale soak: run the full checkpointed pipeline (bucketed commits,
   * metrics tables, skew split) over a corpus 1-2 orders of magnitude
   * beyond the bench, with a deliberately giant conversation, and print
-  * one JSON line of evidence. Usage:
+  * one JSON line of evidence (label counts, `pipeline_secs`, and
+  * `spark_jobs`: the Spark jobs the run started, seen by a listener).
+  * Usage:
   *
   *   runMain graft.tools.Soak [nConvs] [skewCap] [skewMaxTurns] [buckets]
   *
@@ -217,16 +219,19 @@ object Soak {
         benchPath = benchDir, n = 8, minMatches = 1))
     }
 
-    val t1 = System.nanoTime()
-    val res = CheckpointedRun.run(input, outRoot, nBuckets,
-      metricsRoot = Some(metricsRoot), skewMaxTurns = skewMaxTurns,
-      convNearDup =
-        if (withCnd) Some(graft.pipeline.QualityFilter.ConvNearDupConfig()) else None,
-      boilerplate =
-        if (withBp) Some(graft.pipeline.QualityFilter.BoilerplateConfig()) else None,
-      pplIqrK = if (withIqr) Some(graft.rules.RuleConfig.PplIqrK) else None,
-      decontaminate = dcConfig)
-    val runSecs = (System.nanoTime() - t1) / 1e9
+    // spark_jobs: every job the run started, seen by a listener
+    val ((res, runSecs), jobs) = graft.metrics.JobLog.of(spark.sparkContext) {
+      val t1 = System.nanoTime()
+      val r = CheckpointedRun.run(input, outRoot, nBuckets,
+        metricsRoot = Some(metricsRoot), skewMaxTurns = skewMaxTurns,
+        convNearDup =
+          if (withCnd) Some(graft.pipeline.QualityFilter.ConvNearDupConfig()) else None,
+        boilerplate =
+          if (withBp) Some(graft.pipeline.QualityFilter.BoilerplateConfig()) else None,
+        pplIqrK = if (withIqr) Some(graft.rules.RuleConfig.PplIqrK) else None,
+        decontaminate = dcConfig)
+      (r, (System.nanoTime() - t1) / 1e9)
+    }
 
     val out = CheckpointedRun.readOutput(spark, outRoot, nBuckets)
     val row = out.agg(count(lit(1)), sum(when(col("keep"), 1L).otherwise(0L)),
@@ -243,9 +248,10 @@ object Soak {
     val (bp, cnd) = (row.getLong(2), row.getLong(3))
     val (ct, ppl) = (row.getLong(4), row.getLong(5))
     val maxConv = input.groupBy($"conv_id").count().agg(max("count")).head().getLong(0)
-    val lineage = spark.read.parquet(s"$metricsRoot/rule_lineage/data/bucket=0")
+    val lineage = graft.io.SnapshotTable(s"$metricsRoot/rule_lineage", nBuckets).read(spark)
+      .where(col("bucket") === 0)
     println(
-      f"""{"soak":{"turns":$n,"kept":$kept,"max_conv_turns":$maxConv,"buckets":${res.bucketsComputed.size},"gen_secs":$genSecs%.1f,"pipeline_secs":$runSecs%.1f,"turns_per_sec":${n / runSecs}%.0f,"lineage_rules":${lineage.count()},"optins":"${optArg.getOrElse("off")}","boilerplate_dropped":$bp,"conv_neardup_dropped":$cnd,"contaminated_dropped":$ct,"perplexity_dropped":$ppl}}""")
+      f"""{"soak":{"turns":$n,"kept":$kept,"max_conv_turns":$maxConv,"buckets":${res.bucketsComputed.size},"gen_secs":$genSecs%.1f,"pipeline_secs":$runSecs%.1f,"turns_per_sec":${n / runSecs}%.0f,"spark_jobs":${jobs.size},"lineage_rules":${lineage.count()},"optins":"${optArg.getOrElse("off")}","boilerplate_dropped":$bp,"conv_neardup_dropped":$cnd,"contaminated_dropped":$ct,"perplexity_dropped":$ppl}}""")
     spark.stop()
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TranscriptGen
-import graft.metrics.Metrics
+import graft.metrics.{JobLog, Metrics}
 import graft.pipeline.{CheckpointedRun, LabelingCfg, QualityFilter}
 import graft.schema.LabeledTurn
 
@@ -644,7 +644,7 @@ class CheckpointSpec extends AnyFunSuite {
     }
   }
 
-  test("metrics are counted during the data write: <= 4 jobs a bucket, no read-back") {
+  test("metrics counted during the data write: <= 2 jobs a bucket, no metrics write") {
     val spark = TestSpark.spark
     import spark.implicits._
     val root = Files.createTempDirectory("graft_counted").toString
@@ -661,12 +661,88 @@ class CheckpointSpec extends AnyFunSuite {
     assert(res.bucketsComputed == (0 until nBuckets))
     // the torn window the crash drills rely on: data committed, metrics not
     assert(seen == (0 until nBuckets).map(_ -> Seq(true, false, false)))
-    assert(jobs.size <= 4 * nBuckets, s"${jobs.size} jobs for $nBuckets buckets")
+    // the label-and-write job's two jobs; the metrics commits run none
+    assert(jobs.size <= 2 * nBuckets, s"${jobs.size} jobs for $nBuckets buckets")
     // the input is in memory: a job scanning files reads the run's own output
     assert(!jobs.exists(_.rdds.exists(_.name == "FileScanRDD")),
       jobs.map(j => j.id -> j.rdds.map(_.name)).mkString("\n"))
+    // nothing was written under the metrics root but its manifests
+    val written = Files.walk(java.nio.file.Paths.get(mroot)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => Files.isRegularFile(p) && !p.getParent.endsWith("_graft"))
+    assert(written.isEmpty, written.mkString(", "))
     assertMetricsMatch(mroot, nBuckets, CheckpointedRun.readOutput(spark, root, nBuckets))
     assertMetricsMatch(mroot, nBuckets, QualityFilter.label(ds))
+  }
+
+  test("metrics tables with file and row buckets == groupBy tables") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_mixed").toString
+    val mroot = Files.createTempDirectory("graft_mixed_m").toString
+    val ds = spark.createDataset(TranscriptGen.generateLocal(40, seed = 17, skewCap = 100))
+    val nBuckets = 3
+    // bucket 0 in the file layout: each table's rows written by a Spark
+    // job, and manifests without the bucket count, as earlier releases
+    // committed them
+    val one = QualityFilter.label(ds.where(Metrics.bucketCol(nBuckets) === 0))
+    graft.io.SnapshotTable(root, nBuckets).commitBucket(one, 0)
+    graft.io.SnapshotTable(s"$mroot/bucket_stats", nBuckets)
+      .commitBucket(Metrics.bucketStats(one, nBuckets).coalesce(1), 0)
+    graft.io.SnapshotTable(s"$mroot/rule_lineage", nBuckets)
+      .commitBucket(Metrics.ruleLineage(one, nBuckets).coalesce(1), 0)
+    Seq(root, s"$mroot/bucket_stats", s"$mroot/rule_lineage").foreach(CheckpointSpec.dropBucketCount)
+
+    val res = CheckpointedRun.run(ds, root, nBuckets, metricsRoot = Some(mroot))
+    assert(res.bucketsSkipped == Seq(0) && res.bucketsComputed == Seq(1, 2))
+    Seq("bucket_stats", "rule_lineage").foreach { name =>
+      val t = graft.io.SnapshotTable(s"$mroot/$name", nBuckets)
+      assert(t.filesAt(t.currentVersion).map(_.bucket).toSet == Set(0), name)
+      assert(t.recordedBuckets.contains(nBuckets), name)
+    }
+    assertMetricsMatch(mroot, nBuckets, QualityFilter.label(ds))
+  }
+
+  test("a resume under another bucket count fails before any Spark job") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_nbuckets").toString
+    val mroot = Files.createTempDirectory("graft_nbuckets_m").toString
+    val ds = spark.createDataset(TranscriptGen.generateLocal(40, seed = 19, skewCap = 100))
+    def run(in: org.apache.spark.sql.Dataset[graft.schema.Turn], nBuckets: Int,
+            after: Int => Unit = _ => ()) =
+      CheckpointedRun.run(in, root, nBuckets, metricsRoot = Some(mroot), afterDataCommit = after)
+    final class Crash extends RuntimeException("simulated crash")
+    intercept[Crash] { run(ds, 4, after = b => if (b == 1) throw new Crash) }
+    val roots = Seq(root, s"$mroot/bucket_stats", s"$mroot/rule_lineage")
+    def versions = roots.map(r => new String(Files.readAllBytes(
+      java.nio.file.Paths.get(r, "_graft", "VERSION")), java.nio.charset.StandardCharsets.UTF_8))
+    val atCrash = versions
+    assert(graft.io.SnapshotTable(root, 4).completedBuckets == Set(0, 1))
+
+    // every job over this input throws, and none may start
+    val poisoned = ds.map[graft.schema.Turn]((_: graft.schema.Turn) =>
+      throw new IllegalStateException("corpus pass before the bucket-count guard"))
+    Seq(8, 3).foreach { b =>
+      val (outcome, jobs) = JobLog.of(spark.sparkContext)(scala.util.Try(run(poisoned, b)))
+      val e = outcome.failed.get
+      assert(e.isInstanceOf[IllegalArgumentException], e)
+      assert(e.getMessage.contains("4 buckets") && e.getMessage.contains(s"asks for $b"),
+        e.getMessage)
+      assert(jobs.isEmpty, s"B=$b ran ${jobs.size} jobs")
+      assert(versions == atCrash, s"B=$b moved a VERSION")
+    }
+
+    // the unchanged count resumes, and so does a complete table
+    val res = run(ds, 4)
+    assert(res.bucketsComputed == Seq(1, 2, 3) && res.bucketsSkipped == Seq(0))
+    assert(labeled(CheckpointedRun.readOutput(spark, root, 4)) == labeled(QualityFilter.label(ds)))
+    assert(run(poisoned, 4).bucketsComputed.isEmpty)
+    intercept[IllegalArgumentException](run(poisoned, 8))
+
+    // manifests written before the count was recorded resume as before
+    roots.foreach(CheckpointSpec.dropBucketCount)
+    assert(run(poisoned, 4).bucketsComputed.isEmpty)
   }
 
   test("counted metrics with all four opt-ins == groupBy tables over the output") {
@@ -706,6 +782,19 @@ class CheckpointSpec extends AnyFunSuite {
 }
 
 object CheckpointSpec {
+  /** Rewrites a table's current manifest without its `n_buckets` field,
+    * the form manifests had before the bucket count was recorded.
+    */
+  def dropBucketCount(root: String): Unit = {
+    val t = graft.io.SnapshotTable(root, 1)
+    val f = java.nio.file.Paths.get(root, "_graft", s"manifest-v${t.currentVersion}.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val m = mapper.readTree(Files.readAllBytes(f))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(m.remove("n_buckets") != null)
+    Files.write(f, mapper.writeValueAsBytes(m))
+  }
+
   // all four opt-ins fire on this corpus: a canned opening line
   // (boilerplate), a leaked eval phrase (decontamination), verbatim
   // clones (conv near-dup), and IQR ppl bounds

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.metrics.JobLog
 import graft.ops.Decontaminate
 
 /** Benchmark decontamination: hand-computed overlap counts, the

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TranscriptGen
+import graft.io.SnapshotTable
 import graft.metrics.Metrics
 import graft.oracle.OracleFilter
 import graft.pipeline.QualityFilter
@@ -16,16 +17,20 @@ import graft.rules.RuleConfig
 class MetricsSpec extends AnyFunSuite {
 
   /** Writes `labeled` as bucket `bucket` with its counters observed, the
-    * way the runner's data commit does; returns the observed tables.
+    * way the runner's data commit does; returns the observed rows as
+    * the two tables' frames.
     */
   private def observedTables(labeled: DataFrame, bucket: Int): (DataFrame, DataFrame) = {
     val obs = Observation()
     val observed = Metrics.observeCounters(labeled, obs)
     val dir = Files.createTempDirectory("graft_observed").toString
     observed.write.mode("overwrite").parquet(dir)
-    Metrics.observedTables(observed, obs, bucket,
-      TestSpark.spark.read.parquet(dir).count())
+    asTables(new Metrics.CounterRows(TestSpark.spark).of(obs, bucket,
+      TestSpark.spark.read.parquet(dir).count()))
   }
+
+  private def asTables(rows: (SnapshotTable.Rows, SnapshotTable.Rows)): (DataFrame, DataFrame) =
+    (rows._1.toDF(TestSpark.spark), rows._2.toDF(TestSpark.spark))
 
   // the explode/groupBy definitions the shared counter list replaced:
   // the reference for both tables' rows and schema
@@ -140,17 +145,17 @@ class MetricsSpec extends AnyFunSuite {
     pruned.write.format("noop").mode("overwrite").save()
     assert(scala.concurrent.Await.result(obs.future,
       scala.concurrent.duration.Duration(60, "s")).length == 0)
-    val (prunedStats, prunedLineage) = Metrics.observedTables(pruned, obs, 0, 0L)
+    val (prunedStats, prunedLineage) = asTables(new Metrics.CounterRows(spark).of(obs, 0, 0L))
     assert(prunedStats.isEmpty && prunedLineage.isEmpty)
     assertSameTable(prunedStats, Metrics.bucketStats(labeled.where(lit(false)), 1),
       "pruned: stats")
-    intercept[IllegalArgumentException](Metrics.observedTables(pruned, obs, 0, 1L))
+    intercept[IllegalArgumentException](new Metrics.CounterRows(spark).of(obs, 0, 1L))
 
     // counters that disagree with the rows written fail
     val obs2 = Observation()
     val observed = Metrics.observeCounters(labeled, obs2)
     observed.write.format("noop").mode("overwrite").save()
-    intercept[IllegalArgumentException](Metrics.observedTables(observed, obs2, 0, 1L))
+    intercept[IllegalArgumentException](new Metrics.CounterRows(spark).of(obs2, 0, 1L))
   }
 
   test("truncation metrics surface observed bucket caps as data") {
