@@ -17,38 +17,12 @@ import graft.rules.RuleConfig
   * Dedup.scala), so the full-text rows never ride the dedup exchange;
   * near-dup ids come from the MinHash band join (also keys-only).
   * Both flag tables join back on doc_id in ONE left join (they are
-  * unioned first — dup/near-dup id lists are small relative to the
-  * corpus, and AQE broadcasts them when they fit). Everything else is
-  * codegen'd columns.
+  * unioned first): the flag table is collected with a row bound and
+  * broadcast as a local relation when it fits, and left to AQE when it
+  * does not (see [[labelScored]]). Nothing is persisted or kept between
+  * calls. Everything else is codegen'd columns.
   */
 object DocPipeline {
-
-  /** One-slot cache handle bounding the flags-table persist (see
-    * labelScored): each call releases the previous call's relation, so
-    * repeated invocations in a long-lived session never accumulate
-    * pinned storage beyond the latest flags table.
-    *
-    * CONCURRENCY CAVEAT: the slot is process-global, so concurrent
-    * [[labelScored]] calls unpersist each other's flags mid-query. That
-    * is a perf hazard only (the dominant LSH subtree recomputes), never
-    * a correctness one — but a multi-tenant driver should serialize
-    * labelScored calls. Call [[releaseFlagsCache]] when done with the
-    * last returned frame to unpin the final relation.
-    */
-  @transient private var previousFlags: Option[DataFrame] = None
-  private def releasePreviousFlags(current: DataFrame): Unit = synchronized {
-    previousFlags.foreach(_.unpersist(blocking = false))
-    previousFlags = Some(current)
-  }
-
-  /** Unpin the last labelScored call's flags relation (otherwise it
-    * stays cached for the JVM lifetime). Safe to call once the caller
-    * has finished acting on the returned frame.
-    */
-  def releaseFlagsCache(): Unit = synchronized {
-    previousFlags.foreach(_.unpersist(blocking = false))
-    previousFlags = None
-  }
 
   final case class DocConfig(
       minTokens: Int = 5,
@@ -56,12 +30,7 @@ object DocPipeline {
       minQuality: Double = 0.3,
       allowedLangs: Set[String] = RuleConfig.AllowedLangs,
       langConfMin: Double = 0.65,
-      nearDupThreshold: Double = 0.85,
-      // broadcast the dup/near-dup flag table only below this COUNTED
-      // row bound (~32 MB of ids) — on a high-duplication corpus the
-      // flag table is O(corpus) and a hard broadcast hint would bypass
-      // AQE's size check and OOM the driver
-      maxBroadcastFlags: Long = 4L << 20)
+      nearDupThreshold: Double = 0.85)
 
   /** Stage 1: broadcast-model language-ID + perplexity per document —
     * the persisted seam the driver's DuckDB oracle re-labels from
@@ -99,11 +68,20 @@ object DocPipeline {
       .select(col("doc_id"))
   }
 
+  /** Above this many flagged ids the flag table is no longer "small"
+    * (~32 MB of ids): [[labelScored]] stops collecting it for a
+    * broadcast and leaves the join to AQE. Overridable per call via
+    * `maxCollectedFlags` (tests exercise the overflow path with a tiny
+    * bound instead of a 4M-duplicate corpus).
+    */
+  private[graft] val MaxBroadcastFlags = 4 << 20
+
   /** Stage 2: rules + scrub over the scored rows plus the two flag-id
     * tables. Pure Catalyst columns — mirrored 1:1 by the DuckDB oracle.
     */
   def labelScored(scored: DataFrame, exactDups: DataFrame, nearDups: DataFrame,
-                  cfg: DocConfig = DocConfig()): DataFrame = {
+                  cfg: DocConfig = DocConfig(),
+                  maxCollectedFlags: Int = MaxBroadcastFlags): DataFrame = {
     val flags = exactDups.select(col("doc_id"), lit(true).as("is_exact_dup"),
         lit(null).cast("boolean").as("is_near_dup"))
       .unionByName(nearDups.select(col("doc_id"),
@@ -111,24 +89,21 @@ object DocPipeline {
       .groupBy(col("doc_id"))
       .agg(max(col("is_exact_dup")).as("is_exact_dup"),
         max(col("is_near_dup")).as("is_near_dup"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // at most ONE pinned flags relation per JVM: the previous call's
-    // cache is released here (there is no safe in-call unpersist point
-    // — the caller acts on the returned frame later, and dropping the
-    // persist entirely would re-execute the near-dup LSH subtree, the
-    // pipeline's dominant cost, once for the gate count and again for
-    // the join)
-    releasePreviousFlags(flags)
 
-    // broadcast GATED on the counted size (cfg.maxBroadcastFlags): on a
-    // typical corpus the flag table is tiny and the hint keeps full-text
-    // rows out of any join exchange; on a pathological high-duplication
-    // corpus it is O(corpus) rows and the hint would force an OOM-risk
-    // broadcast past AQE's size check — there the plain left join (AQE
-    // decides) is the only correct plan. The count runs on the cached
-    // relation, so the dup subtrees execute exactly once.
+    // The collect is LIMIT-bounded, so it measures the flag table's size
+    // in the job that computes it without pulling an O(corpus) table to
+    // the driver. A table that fits joins back as a broadcast local
+    // relation: the dup subtrees ran once, and no full-text row rides a
+    // join exchange (an unhinted join plans a sort-merge join and AQE
+    // shuffles the scored side before it can switch to a broadcast). On
+    // a high-duplication corpus the table overflows and the plain left
+    // join lets AQE pick the build side; that path computes the dup
+    // subtrees a second time, in the join.
+    val collected = flags.limit(maxCollectedFlags + 1).collect()
     val flagsJoin =
-      if (flags.count() <= cfg.maxBroadcastFlags) broadcast(flags) else flags
+      if (collected.length > maxCollectedFlags) flags
+      else broadcast(scored.sparkSession.createDataFrame(
+        java.util.Arrays.asList(collected: _*), flags.schema))
 
     val quality = TextStats.qualityScoreCol(col("text"))
     val reasons = array_compact(array(

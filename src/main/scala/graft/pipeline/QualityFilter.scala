@@ -168,17 +168,6 @@ object QualityFilter {
     SkewSplit.finishLabeling(withWindows, pplBounds)
   }
 
-  /** Label with explicit skew handling: conversations above
-    * `skewMaxTurns` are routed through range-bucketed windows
-    * (see [[SkewSplit]]); 0 disables the split. `pplBounds` (the
-    * opt-in IQR variant) threads through BOTH branches — skew handling
-    * and data-driven bounds compose.
-    */
-  def label(ds: Dataset[Turn], skewMaxTurns: Int,
-            pplBounds: Option[(Double, Double)] = None): DataFrame =
-    if (skewMaxTurns <= 0) labelScored(score(ds), pplBounds)
-    else SkewSplit.label(ds, skewMaxTurns, pplBounds)
-
   /** End-to-end convenience: read parquet transcripts → labeled output. */
   def run(spark: SparkSession, inputPath: String): DataFrame = {
     import spark.implicits._

@@ -246,7 +246,7 @@ class CheckpointSpec extends AnyFunSuite {
 
     // direct: corpus-wide bounds threaded through labelScored
     val bounds = QualityFilter.pplIqrBounds(QualityFilter.score(ds))
-    val direct = canon(QualityFilter.label(ds, skewMaxTurns = 0, Some(bounds)))
+    val direct = canon(QualityFilter.labelScored(QualityFilter.score(ds), Some(bounds)))
     // the data-driven bounds actually change labels vs the fixed PplMax
     // on this corpus (otherwise the test proves nothing)
     val fixed = canon(QualityFilter.label(ds))
@@ -619,7 +619,7 @@ class CheckpointSpec extends AnyFunSuite {
     val direct = labeled(QualityFilter.withConvNearDup(
       QualityFilter.withContaminated(
         QualityFilter.withBoilerplate(
-          QualityFilter.label(ds, skewMaxTurns = 0, Some(bounds)),
+          QualityFilter.labelScored(QualityFilter.score(ds), Some(bounds)),
           QualityFilter.boilerplateDropKeysRaw(ds, bp)),
         QualityFilter.contaminatedTurnKeys(ds.toDF(), spark.read.parquet(benchDir), ct)),
       QualityFilter.convNearDupDropIds(ds.toDF(), nd)))

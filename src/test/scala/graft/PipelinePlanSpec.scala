@@ -130,11 +130,22 @@ class PipelinePlanSpec extends AnyFunSuite {
   test("doc pipeline: no shuffle exchange carries the text column") {
     // round 2 ranked exact dups with a window over xxhash64(text),
     // shuffling every full-text row; the exactSurvivors shape moves
-    // only (hash, id) and joins tiny flag tables back broadcast
+    // only (hash, id) and joins tiny flag tables back broadcast. Under
+    // AQE the executed plan is an AdaptiveSparkPlanExec, a leaf to a
+    // plain tree walk (which then finds no exchange at all), so the walk
+    // goes through AdaptiveSparkPlanHelper, after a run, over the final
+    // plan AQE chose
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val df = graft.ops.DocPipeline.label(docs)
-    val offenders = df.queryExecution.executedPlan.collect {
+    df.collect()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val executed = df.queryExecution.executedPlan
+    assert(helper.find(executed)(_.isInstanceOf[
+      org.apache.spark.sql.execution.joins.BaseJoinExec]).isDefined,
+      s"the walk does not reach the flags join:\n$executed")
+    val offenders = helper.collect(executed) {
       case e: ShuffleExchangeLike if e.output.exists(_.name == "text") => e
     }
     assert(offenders.isEmpty,

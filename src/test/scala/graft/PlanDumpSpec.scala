@@ -81,7 +81,9 @@ class PlanDumpSpec extends AnyFunSuite {
       """Exact-dup ranking shuffles (xxhash64(text), doc_id) only — no
         |shuffle exchange in this plan carries the text column
         |(asserted by PipelinePlanSpec); dup/near-dup flag ids join back
-        |as one broadcast left join.""".stripMargin)
+        |as one broadcast left join. The flag table is collected under a
+        |row bound before this plan is built, so its dup subtrees run in
+        |that job and the join's build side is a LocalTableScan.""".stripMargin)
 
     dump("conversation near-dup, text-free path (cd2)",
       graft.ops.Dedup.conversationMinHashPairs(

@@ -57,6 +57,16 @@ class SimilaritySpec extends AnyFunSuite {
     assert(sim(base, base) == 1.0)
   }
 
+  test("ngram jaccard is over distinct shingles, with empty inputs at the edges") {
+    // {a b, b a} vs {a b, b c}: one shared of three distinct
+    approx(TextAlgos.ngramJaccard("a b a b", "A b C", 2), 1.0 / 3)
+    approx(TextAlgos.ngramJaccard("a b a b", "b a b a", 2), 1.0)
+    approx(TextAlgos.ngramJaccard("", null, 2), 1.0)
+    approx(TextAlgos.ngramJaccard("a b", "", 2), 0.0)
+    assert(TextAlgos.sortedDistinct(Array.emptyLongArray).isEmpty)
+    assert(TextAlgos.sortedDistinct(Array(3L, 0L, 3L, -1L, 0L)).sameElements(Array(-1L, 0L, 3L)))
+  }
+
   test("simhash: near texts have small hamming distance, far texts large") {
     val base = "the quick brown fox jumps over the lazy dog near the river bank today"
     val near = base.replace("today", "tonight")

@@ -29,7 +29,7 @@ class SkewSpec extends AnyFunSuite {
     val expected = OracleFilter.run(turns).map(normalize)
     val standard = QualityFilter.label(ds).as[LabeledTurn]
       .collect().sortBy(t => (t.conv_id, t.turn_idx)).map(normalize)
-    val split = QualityFilter.label(ds, skewMaxTurns = 25).as[LabeledTurn]
+    val split = SkewSplit.label(ds, 25).as[LabeledTurn]
       .collect().sortBy(t => (t.conv_id, t.turn_idx)).map(normalize)
 
     assert(standard.toSeq == expected)
@@ -56,7 +56,7 @@ class SkewSpec extends AnyFunSuite {
     val ds = spark.createDataset(turns).repartition(7)
 
     val expected = OracleFilter.run(turns).map(normalize)
-    val split = QualityFilter.label(ds, skewMaxTurns = 25).as[LabeledTurn]
+    val split = SkewSplit.label(ds, 25).as[LabeledTurn]
       .collect().sortBy(t => (t.conv_id, t.turn_idx)).map(normalize)
     assert(split.toSeq == expected, {
       val bad = expected.zip(split).filter { case (e, a) => e != a }.take(3)
