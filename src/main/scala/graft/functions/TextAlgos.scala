@@ -13,6 +13,71 @@ import scala.collection.mutable
   */
 object TextAlgos {
 
+  /** Open-addressing set of longs for distinct-counting in the per-row
+    * hot loops ([[turnMetrics]], [[distinctNgramFraction]]): the
+    * java.util.HashSet[Long] it replaces boxed one Long per inserted
+    * gram (an allocation per char of every pipeline row). Semantics are
+    * plain distinct membership — identical results by construction.
+    * Zero is handled via a flag (0 marks empty slots); keys are spread
+    * with mix64 (packed-char keys have low entropy in the low bits).
+    */
+  private final class LongDistinctSet(expected: Int) {
+    private var cap = {
+      var c = 16
+      val target = math.min(math.max(expected, 8) * 2, 1 << 17)
+      while (c < target) c <<= 1
+      c
+    }
+    private var mask = cap - 1
+    private var keys = new Array[Long](cap)
+    private var used = 0
+    private var hasZero = false
+
+    def contains(k: Long): Boolean = {
+      if (k == 0L) hasZero
+      else {
+        var i = (mix64(k) & mask).toInt
+        var st = keys(i)
+        while (st != 0L && st != k) { i = (i + 1) & mask; st = keys(i) }
+        st == k
+      }
+    }
+
+    def add(k: Long): Boolean = {
+      if (k == 0L) {
+        if (hasZero) false else { hasZero = true; true }
+      } else {
+        var i = (mix64(k) & mask).toInt
+        var st = keys(i)
+        while (st != 0L && st != k) { i = (i + 1) & mask; st = keys(i) }
+        if (st == k) false
+        else {
+          keys(i) = k
+          used += 1
+          if (used * 4 > cap * 3) grow()
+          true
+        }
+      }
+    }
+
+    private def grow(): Unit = {
+      val old = keys
+      cap <<= 1
+      mask = cap - 1
+      keys = new Array[Long](cap)
+      var i = 0
+      while (i < old.length) {
+        val k = old(i)
+        if (k != 0L) {
+          var j = (mix64(k) & mask).toInt
+          while (keys(j) != 0L) j = (j + 1) & mask
+          keys(j) = k
+        }
+        i += 1
+      }
+    }
+  }
+
   /** Fraction of distinct char n-grams among all char n-grams of `s`
     * (lowercased by the caller if wanted). Returns 1.0 when there are
     * fewer than 2 grams (nothing to repeat).
@@ -349,38 +414,26 @@ object TextAlgos {
     out
   }
 
-  /** Sorts `a` in place and returns its distinct values, ascending (`a`
-    * itself when it holds no repeats). Empty in, empty out.
-    */
-  private[graft] def sortedDistinct(a: Array[Long]): Array[Long] = {
-    java.util.Arrays.sort(a)
-    var w = 0
-    var r = 1
-    while (r < a.length) {
-      if (a(r) != a(w)) { w += 1; a(w) = a(r) }
-      r += 1
-    }
-    if (w + 1 >= a.length) a else java.util.Arrays.copyOf(a, w + 1)
-  }
-
-  /** Jaccard similarity of the k-shingle sets of two strings:
-    * |A ∩ B| / |A ∪ B| over the distinct shingle hashes, the
-    * intersection counted by a merge of the two sorted sets.
-    */
+  /** Jaccard similarity of the k-shingle sets of two strings. */
   def ngramJaccard(a: String, b: String, k: Int): Double = {
-    val sa = sortedDistinct(shingles(a, k))
-    val sb = sortedDistinct(shingles(b, k))
+    val sa = shingles(a, k)
+    val sb = shingles(b, k)
     if (sa.isEmpty && sb.isEmpty) return 1.0
     if (sa.isEmpty || sb.isEmpty) return 0.0
+    val setA = new LongDistinctSet(sa.length)
+    var da = 0
     var i = 0
-    var j = 0
+    while (i < sa.length) { if (setA.add(sa(i))) da += 1; i += 1 }
+    val setB = new LongDistinctSet(sb.length)
+    var db = 0
     var inter = 0
-    while (i < sa.length && j < sb.length) {
-      if (sa(i) < sb(j)) i += 1
-      else if (sa(i) > sb(j)) j += 1
-      else { inter += 1; i += 1; j += 1 }
+    i = 0
+    while (i < sb.length) {
+      val v = sb(i)
+      if (setB.add(v)) { db += 1; if (setA.contains(v)) inter += 1 }
+      i += 1
     }
-    inter.toDouble / (sa.length + sb.length - inter).toDouble
+    inter.toDouble / (da + db - inter).toDouble
   }
 
   /** Cosine similarity of two float vectors (0 if either norm is 0).
@@ -401,14 +454,13 @@ object TextAlgos {
 
   def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
-  /** Reusable epoch-stamped open-addressing set of longs for the
-    * per-ROW distinct counting inside [[turnMetrics]] and
-    * [[distinctNgramFraction]] (a boxed java.util.HashSet[Long] would
-    * allocate per inserted gram). A fresh set per row allocated (and
-    * zeroed) a table per call, which JFR measured at ~13% of pipeline
-    * samples. One instance per task thread (ThreadLocal); `reset` bumps
-    * the epoch instead of clearing, so a row pays zero allocation and
-    * zero zeroing: a slot counts as used only when its stamp equals the
+  /** Reusable epoch-stamped variant of [[LongDistinctSet]] for the
+    * per-ROW distinct counting inside [[turnMetrics]]: a fresh set per
+    * row allocated (and zeroed) a table per call, which JFR measured at
+    * ~13% of pipeline samples. One instance per task thread
+    * (ThreadLocal); `reset` bumps the epoch instead of clearing, so a
+    * row pays zero allocation and zero zeroing. Membership semantics
+    * are identical: a slot counts only when its stamp equals the
     * current epoch. The set serves one consumer at a time: `reset`
     * fails fast while a consumer holds it (a nested caller would
     * otherwise restart the outer caller's epoch and corrupt its

@@ -80,7 +80,15 @@ object Decontaminate {
       out(i) = TextAlgos.hashJoinedTokens(lower, starts, ends, i, i + n)
       i += 1
     }
-    TextAlgos.sortedDistinct(out)
+    java.util.Arrays.sort(out)
+    // in-place unique on the sorted array
+    var w = 0
+    var r = 1
+    while (r < out.length) {
+      if (out(r) != out(w)) { w += 1; out(w) = out(r) }
+      r += 1
+    }
+    java.util.Arrays.copyOf(out, w + 1)
   }
 
   /** Matches of a doc's sorted-distinct gram hashes against the sorted

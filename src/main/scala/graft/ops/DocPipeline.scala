@@ -1,7 +1,11 @@
 package graft.ops
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 
 import graft.functions.GraftExpressions.doc_fingerprint
 import graft.rules.RuleConfig
@@ -68,11 +72,12 @@ object DocPipeline {
       .select(col("doc_id"))
   }
 
-  /** Above this many flagged ids the flag table is no longer "small"
-    * (~32 MB of ids): [[labelScored]] stops collecting it for a
-    * broadcast and leaves the join to AQE. Overridable per call via
-    * `maxCollectedFlags` (tests exercise the overflow path with a tiny
-    * bound instead of a 4M-duplicate corpus).
+  /** Above this many flagged ids the flag table is no longer "small":
+    * [[labelScored]] stops collecting it for a broadcast and leaves the
+    * join to AQE. At the bound the collected rows hold ~390 MB of
+    * driver heap (~93 B an id: a 32-byte UnsafeRow in its own byte
+    * array, measured at 4,194,304 ids) for as long as the returned frame
+    * lives; running it builds the broadcast relation from them.
     */
   private[graft] val MaxBroadcastFlags = 4 << 20
 
@@ -80,8 +85,15 @@ object DocPipeline {
     * tables. Pure Catalyst columns — mirrored 1:1 by the DuckDB oracle.
     */
   def labelScored(scored: DataFrame, exactDups: DataFrame, nearDups: DataFrame,
-                  cfg: DocConfig = DocConfig(),
-                  maxCollectedFlags: Int = MaxBroadcastFlags): DataFrame = {
+                  cfg: DocConfig = DocConfig()): DataFrame =
+    labelScored(scored, exactDups, nearDups, cfg, MaxBroadcastFlags)
+
+  /** [[labelScored]] with the collect bound as a parameter (tests reach
+    * the overflow path with a tiny bound instead of a 4M-duplicate
+    * corpus).
+    */
+  private[graft] def labelScored(scored: DataFrame, exactDups: DataFrame, nearDups: DataFrame,
+                                 cfg: DocConfig, maxCollectedFlags: Int): DataFrame = {
     val flags = exactDups.select(col("doc_id"), lit(true).as("is_exact_dup"),
         lit(null).cast("boolean").as("is_near_dup"))
       .unionByName(nearDups.select(col("doc_id"),
@@ -93,17 +105,18 @@ object DocPipeline {
     // The collect is LIMIT-bounded, so it measures the flag table's size
     // in the job that computes it without pulling an O(corpus) table to
     // the driver. A table that fits joins back as a broadcast local
-    // relation: the dup subtrees ran once, and no full-text row rides a
-    // join exchange (an unhinted join plans a sort-merge join and AQE
-    // shuffles the scored side before it can switch to a broadcast). On
-    // a high-duplication corpus the table overflows and the plain left
-    // join lets AQE pick the build side; that path computes the dup
-    // subtrees a second time, in the join.
-    val collected = flags.limit(maxCollectedFlags + 1).collect()
+    // relation over the collected UnsafeRows: the dup subtrees ran once,
+    // and no full-text row rides a join exchange (an unhinted join plans
+    // a sort-merge join and AQE shuffles the scored side before it can
+    // switch to a broadcast). On a high-duplication corpus the table
+    // overflows and the plain left join lets AQE pick the build side;
+    // that path computes the dup subtrees a second time, in the join.
+    val bounded = flags.limit(maxCollectedFlags + 1)
+    val rows = ColumnShim.collectInternal(bounded)
     val flagsJoin =
-      if (collected.length > maxCollectedFlags) flags
-      else broadcast(scored.sparkSession.createDataFrame(
-        java.util.Arrays.asList(collected: _*), flags.schema))
+      if (rows.length > maxCollectedFlags) flags
+      else broadcast(ColumnShim.ofRows(scored.sparkSession, LocalRelation(
+        bounded.queryExecution.analyzed.output, ArraySeq.unsafeWrapArray(rows))))
 
     val quality = TextStats.qualityScoreCol(col("text"))
     val reasons = array_compact(array(

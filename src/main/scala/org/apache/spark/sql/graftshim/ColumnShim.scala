@@ -22,6 +22,17 @@ object ColumnShim {
   def reExecute(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     ofRows(df.sparkSession, df.queryExecution.logical)
 
+  /** The rows of `df` as the executors return them (UnsafeRows, never
+    * converted to external `Row`s), run as one SQL execution like
+    * `collect`.
+    */
+  def collectInternal(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe)(
+      qe.executedPlan.executeCollect())
+  }
+
   /** DataFrame over a logical plan (`Dataset.ofRows` is `private[sql]`). */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)

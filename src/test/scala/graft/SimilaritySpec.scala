@@ -63,8 +63,6 @@ class SimilaritySpec extends AnyFunSuite {
     approx(TextAlgos.ngramJaccard("a b a b", "b a b a", 2), 1.0)
     approx(TextAlgos.ngramJaccard("", null, 2), 1.0)
     approx(TextAlgos.ngramJaccard("a b", "", 2), 0.0)
-    assert(TextAlgos.sortedDistinct(Array.emptyLongArray).isEmpty)
-    assert(TextAlgos.sortedDistinct(Array(3L, 0L, 3L, -1L, 0L)).sameElements(Array(-1L, 0L, 3L)))
   }
 
   test("simhash: near texts have small hamming distance, far texts large") {

@@ -3,7 +3,8 @@
 whitespace -- in the Scala and Java sources under src/main and src/test.
 
 Usage:
-  tools/code_lines.py            # the working tree
+  tools/code_lines.py            # the working tree (files git tracks or
+                                 # would track: untracked but not ignored)
   tools/code_lines.py REV        # a git revision, read with `git show`
   tools/code_lines.py REV1 REV2  # both, plus the difference per root
 
@@ -87,14 +88,16 @@ def count_rev(rev):
 
 
 def count_tree():
+    """Same file set as count_rev: what git tracks or would track (new,
+    not ignored), read from disk; a tracked file deleted on disk counts 0."""
     out = {}
     for root in ROOTS:
+        names = git("ls-files", "-co", "--exclude-standard", "--", root).decode().split()
         total = 0
-        for d, _, files in os.walk(root):
-            for f in files:
-                if f.endswith(EXTS):
-                    with open(os.path.join(d, f), encoding="utf-8") as fh:
-                        total += code_lines(fh.read())
+        for p in names:
+            if p.endswith(EXTS) and os.path.isfile(p):
+                with open(p, encoding="utf-8") as fh:
+                    total += code_lines(fh.read())
         out[root] = total
     return out
 
